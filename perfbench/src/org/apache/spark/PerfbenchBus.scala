@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the listener bus's drain, which Spark keeps package-private:
+  * the tracer reads its spans only after every queued event arrived.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
