@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, min, when}
 import org.apache.spark.sql.streaming.StreamingQuery
+
+import StreamErrorHandling.eachTrigger
 
 /** Streaming materialized-view maintenance — the streaming twin of
   * `Pipeline.refreshAggState` (x8): every micro-batch folds into a
@@ -11,12 +13,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * workable shape: the state table is key-cardinality-sized, each
   * trigger costs one batch aggregate plus one state merge.
   *
-  * Crash consistency reuses the epoch-keyed store contract of the
-  * retry pending store (StreamErrorHandling round 6): trigger `N`
-  * reads the newest `epoch=M` with `M < N` and OVERWRITES `epoch=N`,
-  * so a crash-replayed trigger recomputes against the untouched input
-  * epoch and rewrites its own output — no double counting, pinned by
-  * the same kind of replay spec.
+  * Every state table here is an [[EpochStore]]: trigger `N` reads the
+  * newest `epoch=M` with `M < N` and OVERWRITES `epoch=N`, so a
+  * crash-replayed trigger recomputes against the untouched input epoch
+  * and rewrites its own output — no double counting
+  * (StoreReplayPropertySpec pins it for every member).
   */
 object StreamAggState {
 
@@ -27,12 +28,9 @@ object StreamAggState {
   def maintainAggState(stream: DataFrame, keyCols: Seq[String],
       sumCols: Seq[String], statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processTrigger(batch.toDF(), batchId, keyCols, sumCols, statePath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processTrigger(batch, batchId, keyCols, sumCols, statePath)
+    }
 
   /** One trigger, factored out so the crash-replay contract is testable
     * deterministically: calling this twice with the same `batchId` must
@@ -42,24 +40,22 @@ object StreamAggState {
   private[graft] def processTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], sumCols: Seq[String], statePath: String): Unit = {
     val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     // materialize = false: the epoch write below IS the round's
     // materialization, and the next trigger reads from parquet — the
     // lineage truncates by construction
-    graft.operators.Pipeline
-      .refreshAggState(prior, batch, keyCols, sumCols, materialize = false)
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, graft.operators.Pipeline
+      .refreshAggState(prior, batch, keyCols, sumCols, materialize = false))
   }
 
   /** The current (latest-epoch) aggregate state, if any trigger ran.
     * Note: state KEYS never regress (the merge unions key sets), so a
     * readable-but-empty newest epoch can only mean "no data yet" —
-    * the empty-dir fallback inherited from the pending store is safe
-    * here too.
+    * EpochStore's empty-dir rule is safe here too.
     */
   def readState(spark: SparkSession, statePath: String): Option[DataFrame] =
-    StreamErrorHandling.readPending(spark, statePath)
+    EpochStore(spark, statePath).before(Long.MaxValue)
 
   /** Streaming burst detection against a MAINTAINED per-user
     * event-time store — ST34's store face (the punctuate face is
@@ -71,26 +67,23 @@ object StreamAggState {
     * ([[burstEpisodesFromState]] — StreamingSpec pins equality with
     * oracle-verified q55 over the same corpus). Epoch overwrite
     * inherits the family crash contract (StoreReplayPropertySpec
-    * membership); epoch GC bounds storage at O(corpus).
+    * membership).
     */
   def maintainBurstEvents(stream: DataFrame, statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBurstTrigger(batch.toDF(), batchId, statePath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processBurstTrigger(batch, batchId, statePath)
+    }
 
   private[graft] def processBurstTrigger(batch: DataFrame, batchId: Long,
       statePath: String): Unit = {
     val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val events = batch.select(col("user_id").cast("long").as("user_id"),
       col("ts").cast("long").as("ts"))
-    prior.map(_.unionByName(events)).getOrElse(events).distinct()
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId,
+      prior.map(_.unionByName(events)).getOrElse(events).distinct())
   }
 
   /** Current burst episodes over everything the store has seen — the
@@ -100,22 +93,6 @@ object StreamAggState {
     readState(spark, statePath)
       .map(st => graft.operators.Bursts.kleinberg(st, s, gamma))
 
-  /** Streaming incremental near-dup detection against a MAINTAINED LSH
-    * band index — the streaming face of d6/d25: each trigger signs
-    * ONLY its batch, probes the epoch-keyed index of everything seen
-    * before, emits the verified corpus×batch (da, db, jaccard) pairs
-    * for the trigger (d6's `minHashLshIncremental` semantics — the
-    * spec pins per-trigger equality with that batch twin), then
-    * rewrites BOTH state epochs (band index, shingle sets) with the
-    * batch folded in. The PROBE is what's incremental (∝ batch size);
-    * the epoch rewrite is O(corpus) I/O per trigger — the
-    * compacted-log family's documented shape — and epoch GC keeps
-    * STORAGE at O(corpus), never O(triggers × corpus). Inherits the
-    * family crash contract: a replayed trigger reads the untouched
-    * epochs < N and overwrites epoch=N plus its per-batch pair dir —
-    * proven by its StoreReplayPropertySpec membership, not a bespoke
-    * test.
-    */
   /** Streaming ExactSubstr dedup against a MAINTAINED fingerprint
     * store — the streaming face of D34 the way maintainLshDedup is
     * D6's: each trigger winnow-selects ONLY its batch, merges its
@@ -135,13 +112,9 @@ object StreamAggState {
   def maintainExactSubstr(stream: DataFrame, k: Int, w: Int,
       statePath: String, valuesPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processExactSubstrTrigger(batch.toDF(), batchId, k, w,
-          statePath, valuesPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processExactSubstrTrigger(batch, batchId, k, w, statePath, valuesPath)
+    }
 
   private[graft] def processExactSubstrTrigger(batch: DataFrame,
       batchId: Long, k: Int, w: Int, statePath: String,
@@ -152,8 +125,8 @@ object StreamAggState {
     val occ = Dedup.winnowOccurrences(toks, k, w)
       .localCheckpoint() // feeds the store merge AND the removals join
     val batchCanon = occ.groupBy(col("fp")).agg(min(col("okey")).as("keep_key"))
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val store = prior
       .map(_.unionByName(batchCanon).groupBy(col("fp"))
         .agg(min(col("keep_key")).as("keep_key")))
@@ -167,17 +140,7 @@ object StreamAggState {
     // store was computed from epochs < N only)
     Dedup.trimByRemovals(toks, removals, k)
       .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    // epoch GC: only the newest epoch below batchId is replay-reachable
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+    state.commit(batchId, store)
   }
 
   /** Streaming per-domain document cap — P15's live face (ST37): the
@@ -203,21 +166,18 @@ object StreamAggState {
   def maintainDomainCap(stream: DataFrame, domainCol: String, k: Int,
       statePath: String, valuesPath: String, rejectedPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processDomainCapTrigger(batch.toDF(), batchId, domainCol, k,
-          statePath, valuesPath, rejectedPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processDomainCapTrigger(batch, batchId, domainCol, k,
+        statePath, valuesPath, rejectedPath)
+    }
 
   private[graft] def processDomainCapTrigger(batch: DataFrame, batchId: Long,
       domainCol: String, k: Int, statePath: String, valuesPath: String,
       rejectedPath: String): Unit = {
     require(k >= 1, s"domain cap must be >= 1: $k")
     val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val pinned = batch.localCheckpoint() // feeds candidates AND the reject diff
     // bounded-heap thinning: nothing beyond k per domain can be
     // admitted, so the window below never sees more than domains×k rows
@@ -252,16 +212,7 @@ object StreamAggState {
       .select(col(domainCol),
         (coalesce(col("n_admitted"), lit(0L))
           + coalesce(col("n_new"), lit(0L))).as("n_admitted"))
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+    state.commit(batchId, store)
   }
 
   /** Streaming chi-square drift monitor (ST39) — X28's live face: the
@@ -273,25 +224,21 @@ object StreamAggState {
     * written to stats/batch_id=N — so trigger N's statistic is
     * BIT-EQUAL to batch `chiSquare` over everything ingested through
     * trigger N (same cells, same sorted fold; StreamingSpec pins it).
-    * Stats before state (family crash contract); epoch GC.
+    * Stats before state (family crash contract).
     */
   def maintainChiSquare(stream: DataFrame, aCol: String, bCol: String,
       statePath: String, statsPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processChiSquareTrigger(batch.toDF(), batchId, aCol, bCol,
-          statePath, statsPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processChiSquareTrigger(batch, batchId, aCol, bCol, statePath, statsPath)
+    }
 
   private[graft] def processChiSquareTrigger(batch: DataFrame, batchId: Long,
       aCol: String, bCol: String, statePath: String,
       statsPath: String): Unit = {
     val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val batchCells = batch
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("o"))
@@ -302,28 +249,31 @@ object StreamAggState {
       .localCheckpoint() // stats derivation AND the epoch write
     graft.operators.Pipeline.chiSquareFromCells(store)
       .write.mode("overwrite").parquet(s"$statsPath/batch_id=$batchId")
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+    state.commit(batchId, store)
   }
 
+  /** Streaming incremental near-dup detection against a MAINTAINED LSH
+    * band index — the streaming face of d6/d25: each trigger signs
+    * ONLY its batch, probes the epoch-keyed index of everything seen
+    * before, emits the verified corpus×batch (da, db, jaccard) pairs
+    * for the trigger (d6's `minHashLshIncremental` semantics — the
+    * spec pins per-trigger equality with that batch twin), then
+    * rewrites BOTH state epochs (band index, shingle sets) with the
+    * batch folded in. The PROBE is what's incremental (∝ batch size);
+    * the epoch rewrite is O(corpus) I/O per trigger — the
+    * compacted-log family's documented shape. Inherits the family
+    * crash contract: a replayed trigger reads the untouched
+    * epochs < N and overwrites epoch=N plus its per-batch pair dir —
+    * proven by its StoreReplayPropertySpec membership, not a bespoke
+    * test.
+    */
   def maintainLshDedup(stream: DataFrame, numHashes: Int, rowsPerBand: Int,
       shingleSize: Int, threshold: Double, statePath: String,
       pairsPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processLshDedupTrigger(batch.toDF(), batchId, numHashes, rowsPerBand,
-          shingleSize, threshold, statePath, pairsPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processLshDedupTrigger(batch, batchId, numHashes, rowsPerBand,
+        shingleSize, threshold, statePath, pairsPath)
+    }
 
   private[graft] def processLshDedupTrigger(batch: DataFrame, batchId: Long,
       numHashes: Int, rowsPerBand: Int, shingleSize: Int, threshold: Double,
@@ -336,10 +286,10 @@ object StreamAggState {
       newSets.select(col("doc_id"), graft.functions.Fence(
         graft.functions.MinHashSig(col("ts"), numHashes)).as("sig")),
       rowsPerBand).localCheckpoint()
-    val priorBands = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/bands", batchId).map(_._2)
-    val priorDocs = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/docs", batchId).map(_._2)
+    val (bands, docs) =
+      (EpochStore(spark, s"$statePath/bands"), EpochStore(spark, s"$statePath/docs"))
+    val priorBands = bands.before(batchId)
+    val priorDocs = docs.before(batchId)
     val pairs = (priorBands, priorDocs) match {
       case (Some(pb), Some(pd)) =>
         val cand = pb.as("a").join(newBands.as("b"),
@@ -361,24 +311,8 @@ object StreamAggState {
     // anywhere in between replays the whole trigger, which rewrites
     // every one of the three destinations idempotently
     pairs.write.mode("overwrite").parquet(s"$pairsPath/batch_id=$batchId")
-    priorBands.map(_.unionByName(newBands)).getOrElse(newBands)
-      .write.mode("overwrite").parquet(s"$statePath/bands/epoch=$batchId")
-    priorDocs.map(_.unionByName(newSets)).getOrElse(newSets)
-      .write.mode("overwrite").parquet(s"$statePath/docs/epoch=$batchId")
-    // epoch GC (the retry-store idiom): of the epochs below batchId
-    // only the NEWEST is replay-reachable — without this, storage is
-    // O(triggers × corpus)
-    Seq(s"$statePath/bands", s"$statePath/docs").foreach { dir =>
-      val prior = StreamErrorHandling.pendingEpochs(spark, dir)
-        .filter(_ < batchId)
-      if (prior.size > 1) {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        prior.dropRight(1).foreach { e =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-        }
-      }
-    }
+    bands.commit(batchId, priorBands.map(_.unionByName(newBands)).getOrElse(newBands))
+    docs.commit(batchId, priorDocs.map(_.unionByName(newSets)).getOrElse(newSets))
   }
 
   /** Streaming log compaction (ST11) — the compacted-topic VIEW
@@ -396,13 +330,10 @@ object StreamAggState {
   def maintainCompactedLog(stream: DataFrame, keyCols: Seq[String],
       orderCols: Seq[String], payloadCols: Seq[String], statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processCompactTrigger(batch.toDF(), batchId, keyCols, orderCols,
-          payloadCols, statePath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processCompactTrigger(batch, batchId, keyCols, orderCols,
+        payloadCols, statePath)
+    }
 
   private[graft] def processCompactTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], orderCols: Seq[String], payloadCols: Seq[String],
@@ -410,15 +341,15 @@ object StreamAggState {
     val spark = batch.sparkSession
     val bc = graft.operators.Pipeline.compactLog(batch, keyCols, orderCols,
       payloadCols)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val merged = prior match {
       case Some(st) =>
         graft.operators.Pipeline.mergeCompacted(st, bc, keyCols, orderCols,
           payloadCols)
       case None => bc
     }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, merged)
   }
 
   /** Streaming CDC emission (ST16) — [[maintainCompactedLog]] plus a
@@ -438,13 +369,10 @@ object StreamAggState {
   def maintainCompactedLogCdc(stream: DataFrame, keyCols: Seq[String],
       orderCols: Seq[String], payloadCols: Seq[String], statePath: String,
       cdcPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processCdcTrigger(batch.toDF(), batchId, keyCols, orderCols,
-          payloadCols, statePath, cdcPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processCdcTrigger(batch, batchId, keyCols, orderCols,
+        payloadCols, statePath, cdcPath)
+    }
 
   private[graft] def processCdcTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], orderCols: Seq[String], payloadCols: Seq[String],
@@ -452,8 +380,8 @@ object StreamAggState {
     val spark = batch.sparkSession
     val bc = graft.operators.Pipeline.compactLog(batch, keyCols, orderCols,
       payloadCols)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     // pin: the merged frame feeds the state write AND the diff join —
     // unpinned it would re-run the merge aggregate once per consumer
     val merged = (prior match {
@@ -475,7 +403,7 @@ object StreamAggState {
           .drop("__prior_nv")
     }
     cdc.write.mode("overwrite").parquet(s"$cdcPath/epoch=$batchId")
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, merged)
   }
 
   /** Streaming SCD Type-2 maintenance (ST20) — the historized
@@ -498,21 +426,18 @@ object StreamAggState {
   def maintainScd2(stream: DataFrame, keyCols: Seq[String],
       valueCols: Seq[String], tsCol: String, tieCol: String,
       statePath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processScd2Trigger(batch.toDF(), batchId, keyCols, valueCols, tsCol,
-          tieCol, statePath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processScd2Trigger(batch, batchId, keyCols, valueCols, tsCol,
+        tieCol, statePath)
+    }
 
   private[graft] def processScd2Trigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], valueCols: Seq[String], tsCol: String,
       tieCol: String, statePath: String): Unit = {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val slim = batch.select((keyCols ++ valueCols :+ tsCol :+ tieCol).map(col): _*)
     val merged = prior match {
       case None => graft.operators.Pipeline.scd2(slim, keyCols, valueCols,
@@ -532,7 +457,7 @@ object StreamAggState {
           .drop("__voff")
         closed.unionByName(adjusted)
     }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, merged)
   }
 
   /** Streaming anomaly detection (ST10) — the streaming twin of q34's
@@ -556,13 +481,10 @@ object StreamAggState {
   def detectAnomalies(stream: DataFrame, keyCols: Seq[String],
       valueCol: String, k: Int, minPrior: Long, statePath: String,
       outPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processAnomalyTrigger(batch.toDF(), batchId, keyCols, valueCol, k,
-          minPrior, statePath, outPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processAnomalyTrigger(batch, batchId, keyCols, valueCol, k,
+        minPrior, statePath, outPath)
+    }
 
   private[graft] def processAnomalyTrigger(batch: DataFrame, batchId: Long,
       keyCols: Seq[String], valueCol: String, k: Int, minPrior: Long,
@@ -577,8 +499,8 @@ object StreamAggState {
     val enriched = batch
       .withColumn("__v", col(valueCol).cast(dec))
       .withColumn("__vv", col(valueCol).cast(dec) * col(valueCol).cast(dec))
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val judged = prior match {
       case Some(st) =>
         val stats = st.select(keyCols.map(col) :+ col("n").as("n_prior") :+
@@ -596,10 +518,9 @@ object StreamAggState {
         batch.withColumn("n_prior", lit(0L)).withColumn("flag", lit(false))
     }
     judged.write.mode("overwrite").parquet(s"$outPath/epoch=$batchId")
-    graft.operators.Pipeline
+    state.commit(batchId, graft.operators.Pipeline
       .refreshAggState(prior, enriched, keyCols, Seq("__v", "__vv"),
-        materialize = false)
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+        materialize = false))
   }
 
   /** Streaming trailing-window distinct maintenance (ST24) — live
@@ -616,13 +537,10 @@ object StreamAggState {
   def maintainSlidingDistinct(stream: DataFrame, dayCol: String,
       keyCol: String, statePath: String, checkpointPath: String,
       lgK: Int = 12): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processSlidingDistinctTrigger(batch.toDF(), batchId, dayCol, keyCol,
-          statePath, lgK)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processSlidingDistinctTrigger(batch, batchId, dayCol, keyCol,
+        statePath, lgK)
+    }
 
   private[graft] def processSlidingDistinctTrigger(batch: DataFrame,
       batchId: Long, dayCol: String, keyCol: String, statePath: String,
@@ -630,15 +548,15 @@ object StreamAggState {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
     val bs = graft.operators.Pipeline.daySketchTable(batch, dayCol, keyCol, lgK)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val merged = prior match {
       case None => bs
       case Some(st) => st.unionByName(bs)
         .groupBy(col(dayCol))
         .agg(hll_union_agg(col("sketch"), lit(true)).as("sketch"))
     }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, merged)
   }
 
   /** The live trailing-window estimates off the maintained day-sketch
@@ -662,13 +580,10 @@ object StreamAggState {
   def maintainQuantileSketch(stream: DataFrame, groupCol: String,
       valueCol: String, relativeError: Double, statePath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processQuantileTrigger(batch.toDF(), batchId, groupCol, valueCol,
-          relativeError, statePath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processQuantileTrigger(batch, batchId, groupCol, valueCol,
+        relativeError, statePath)
+    }
 
   private[graft] def processQuantileTrigger(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, relativeError: Double,
@@ -676,14 +591,14 @@ object StreamAggState {
     val spark = batch.sparkSession
     val bs = graft.operators.Pipeline.quantileSketch(batch, groupCol,
       valueCol, relativeError)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val merged = prior match {
       case None => bs
       case Some(st) => graft.operators.Pipeline
         .mergeQuantileSketchesBy(st.unionByName(bs), groupCol)
     }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, merged)
   }
 
   /** Streaming frequency-sketch maintenance (ST27) — completes the
@@ -700,13 +615,10 @@ object StreamAggState {
       valueCol: String, statePath: String, checkpointPath: String,
       eps: Double = 0.001, confidence: Double = 0.99,
       seed: Int = 42): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processFreqTrigger(batch.toDF(), batchId, groupCol, valueCol,
-          statePath, eps, confidence, seed)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processFreqTrigger(batch, batchId, groupCol, valueCol,
+        statePath, eps, confidence, seed)
+    }
 
   private[graft] def processFreqTrigger(batch: DataFrame, batchId: Long,
       groupCol: String, valueCol: String, statePath: String,
@@ -714,14 +626,14 @@ object StreamAggState {
     val spark = batch.sparkSession
     val bs = graft.operators.Pipeline.freqSketch(batch, groupCol, valueCol,
       eps, confidence, seed)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val merged = prior match {
       case None => bs
       case Some(st) => graft.operators.Pipeline
         .mergeFreqSketchesBy(st.unionByName(bs), groupCol)
     }
-    merged.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, merged)
   }
 
   /** Streaming cluster-on-write ingest (ST26): each micro-batch lands
@@ -742,13 +654,10 @@ object StreamAggState {
   def clusterOnWrite(stream: DataFrame, root: String, cols: Seq[String],
       numFiles: Int, minDeltaBatches: Int,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processClusterOnWriteTrigger(batch.toDF(), batchId, root, cols,
-          numFiles, minDeltaBatches)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processClusterOnWriteTrigger(batch, batchId, root, cols,
+        numFiles, minDeltaBatches)
+    }
 
   private[graft] def processClusterOnWriteTrigger(batch: DataFrame,
       batchId: Long, root: String, cols: Seq[String], numFiles: Int,
@@ -791,13 +700,10 @@ object StreamAggState {
   def maintainKnnGraph(stream: DataFrame, g: Int, rounds: Int, bridges: Int,
       statePath: String, graphPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processKnnGraphTrigger(batch.toDF(), batchId, g, rounds, bridges,
-          statePath, graphPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processKnnGraphTrigger(batch, batchId, g, rounds, bridges,
+        statePath, graphPath)
+    }
 
   private[graft] def processKnnGraphTrigger(batch: DataFrame, batchId: Long,
       g: Int, rounds: Int, bridges: Int, statePath: String,
@@ -805,10 +711,10 @@ object StreamAggState {
     import graft.operators.{Similarity, TopK}
     val spark = batch.sparkSession
     val newV = Similarity.pinVectors(batch, "label")
-    val priorV = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/vectors", batchId).map(_._2)
-    val priorW = StreamErrorHandling
-      .readPendingBefore(spark, s"$statePath/within", batchId).map(_._2)
+    val (vectors, within) =
+      (EpochStore(spark, s"$statePath/vectors"), EpochStore(spark, s"$statePath/within"))
+    val priorV = vectors.before(batchId)
+    val priorW = within.before(batchId)
     val allV = priorV.map(_.unionByName(newV)).getOrElse(newV)
       .localCheckpoint() // feeds scoring, refine, and the vectors epoch
     // only NEW-touching ordered pairs are scored: dst-new against the
@@ -826,20 +732,8 @@ object StreamAggState {
     val graph = Similarity.refineKnnGraph(allV, w, g, rounds, bridges)
     // graph BEFORE the state epochs (the established replay ordering)
     graph.write.mode("overwrite").parquet(s"$graphPath/batch_id=$batchId")
-    allV.write.mode("overwrite").parquet(s"$statePath/vectors/epoch=$batchId")
-    w.write.mode("overwrite").parquet(s"$statePath/within/epoch=$batchId")
-    // epoch GC: only the newest epoch below batchId is replay-reachable
-    Seq(s"$statePath/vectors", s"$statePath/within").foreach { dir =>
-      val prior = StreamErrorHandling.pendingEpochs(spark, dir)
-        .filter(_ < batchId)
-      if (prior.size > 1) {
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        prior.dropRight(1).foreach { e =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-        }
-      }
-    }
+    vectors.commit(batchId, allV)
+    within.commit(batchId, w)
   }
 
   /** Streaming BM25 retrieval against a MAINTAINED postings store —
@@ -855,22 +749,18 @@ object StreamAggState {
     * both ways). The tokenize-and-aggregate cost — the corpus-sized
     * part — is ∝ batch; the scoring join prunes to query-term postings
     * before anything scores (the t33 shape); the store rewrite is the
-    * compacted-log family's documented O(corpus) I/O per trigger with
-    * epoch GC holding STORAGE at O(corpus). Crash contract: scores
-    * write BEFORE the state epoch; a replayed trigger recomputes from
-    * epochs < N and rewrites both idempotently
+    * compacted-log family's documented O(corpus) I/O per trigger.
+    * Crash contract: scores write BEFORE the state epoch; a replayed
+    * trigger recomputes from epochs < N and rewrites both idempotently
     * (StoreReplayPropertySpec row).
     */
   def maintainBm25(stream: DataFrame, queryTerms: DataFrame, k: Int,
       statePath: String, scoresPath: String, checkpointPath: String,
       k1: Double = 1.2, b: Double = 0.75): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBm25Trigger(batch.toDF(), batchId, queryTerms, k, k1, b,
-          statePath, scoresPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processBm25Trigger(batch, batchId, queryTerms, k, k1, b,
+        statePath, scoresPath)
+    }
 
   private[graft] def processBm25Trigger(batch: DataFrame, batchId: Long,
       queryTerms: DataFrame, k: Int, k1: Double, b: Double,
@@ -878,22 +768,12 @@ object StreamAggState {
     import graft.operators.TextAnalysis
     val spark = batch.sparkSession
     val batchTf = TextAnalysis.termFrequencies(batch)
-    val prior = StreamErrorHandling
-      .readPendingBefore(spark, statePath, batchId).map(_._2)
+    val state = EpochStore(spark, statePath)
+    val prior = state.before(batchId)
     val store = prior.map(_.unionByName(batchTf)).getOrElse(batchTf)
       .localCheckpoint() // consumed by scoring AND the epoch write
     TextAnalysis.bm25TopDocsFromTf(store, queryTerms, k, k1, b)
       .write.mode("overwrite").parquet(s"$scoresPath/batch_id=$batchId")
-    store.write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
-    // epoch GC: only the newest epoch below batchId is replay-reachable
-    val old = StreamErrorHandling.pendingEpochs(spark, statePath)
-      .filter(_ < batchId)
-    if (old.size > 1) {
-      val p = new org.apache.hadoop.fs.Path(statePath)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      old.dropRight(1).foreach { e =>
-        fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-      }
-    }
+    state.commit(batchId, store)
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -26,6 +26,15 @@ object StreamErrorHandling {
     */
   def capture(stream: DataFrame, results: Map[String, Column], input: Column): ErrorFrame =
     ErrorFrame.captureErrors(stream, results, input)
+
+  /** The one trigger runner: start `df` as a checkpointed query that
+    * hands each micro-batch and its id to `f` (foreachBatch, append). */
+  private[streaming] def eachTrigger(df: DataFrame, checkpointPath: String)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    df.writeStream
+      .option("checkpointLocation", checkpointPath)
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) => f(batch.toDF(), batchId) }
+      .start()
 
   /** Name under which capture telemetry (n_rows / n_errors /
     * errors_by_class) appears in StreamingQueryProgress.observedMetrics.
@@ -107,26 +116,23 @@ object StreamErrorHandling {
       dlqPath: String,
       checkpointPath: String): StreamingQuery = {
     val captured = capture(stream, results, input).observedNamed(TelemetryName)
-    captured.df.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // persist: the two sink writes below would otherwise each re-run
-        // the whole micro-batch plan — paying the capture scan twice AND
-        // double-counting the observe telemetry accumulators
-        val cached = batch.toDF().persist()
-        try {
-          val ef = ErrorFrame(cached, captured.resultNames, input)
-          // exactly-once: each micro-batch owns a batch_id=N partition dir
-          // and overwrites it — replaying the batch after a crash is
-          // idempotent, readers see base-path partition discovery.
-          ef.values.write.mode("overwrite")
-            .parquet(s"$valuesPath/batch_id=$batchId")
-          ef.deadLetters(description).write.mode("overwrite")
-            .parquet(s"$dlqPath/batch_id=$batchId")
-        } finally { cached.unpersist(); () }
-        ()
-      }
-      .start()
+    eachTrigger(captured.df, checkpointPath) { (batch, batchId) =>
+      // persist: the two sink writes below would otherwise each re-run
+      // the whole micro-batch plan — paying the capture scan twice AND
+      // double-counting the observe telemetry accumulators
+      val cached = batch.persist()
+      try {
+        val ef = ErrorFrame(cached, captured.resultNames, input)
+        // exactly-once: each micro-batch owns a batch_id=N partition dir
+        // and overwrites it — replaying the batch after a crash is
+        // idempotent, readers see base-path partition discovery.
+        ef.values.write.mode("overwrite")
+          .parquet(s"$valuesPath/batch_id=$batchId")
+        ef.deadLetters(description).write.mode("overwrite")
+          .parquet(s"$dlqPath/batch_id=$batchId")
+      } finally { cached.unpersist(); () }
+      ()
+    }
   }
 
   /** [[captureToDlq]] with per-trigger DLQ rate limiting (error-storm
@@ -154,30 +160,27 @@ object StreamErrorHandling {
     // what is STORED, never what is observable (the storm's true
     // magnitude must stay visible in the progress events)
     val captured = capture(stream, results, input).observedNamed(TelemetryName)
-    captured.df.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val cached = batch.toDF().persist()
+    eachTrigger(captured.df, checkpointPath) { (batch, batchId) =>
+      val cached = batch.persist()
+      try {
+        val ef = ErrorFrame(cached, captured.resultNames, input)
+        ef.values.write.mode("overwrite")
+          .parquet(s"$valuesPath/batch_id=$batchId")
+        val dl = ef.deadLetters(description)
+          .withColumn("__class", col("cause.error_class")).persist()
         try {
-          val ef = ErrorFrame(cached, captured.resultNames, input)
-          ef.values.write.mode("overwrite")
-            .parquet(s"$valuesPath/batch_id=$batchId")
-          val dl = ef.deadLetters(description)
-            .withColumn("__class", col("cause.error_class")).persist()
-          try {
-            val kept = graft.sources.Sinks.rateLimitDeadLetters(dl,
-              Seq("__class"), Seq(graft.operators.TopK.asc("input_value")), maxPerClass)
-            kept.drop("__class").write.mode("overwrite")
-              .parquet(s"$dlqPath/batch_id=$batchId")
-            graft.sources.Sinks.rateLimitAccounting(dl, kept, Seq("__class"))
-              .withColumnRenamed("__class", "error_class")
-              .write.mode("overwrite")
-              .parquet(s"$accountingPath/batch_id=$batchId")
-          } finally { dl.unpersist(); () }
-        } finally { cached.unpersist(); () }
-        ()
-      }
-      .start()
+          val kept = graft.sources.Sinks.rateLimitDeadLetters(dl,
+            Seq("__class"), Seq(graft.operators.TopK.asc("input_value")), maxPerClass)
+          kept.drop("__class").write.mode("overwrite")
+            .parquet(s"$dlqPath/batch_id=$batchId")
+          graft.sources.Sinks.rateLimitAccounting(dl, kept, Seq("__class"))
+            .withColumnRenamed("__class", "error_class")
+            .write.mode("overwrite")
+            .parquet(s"$accountingPath/batch_id=$batchId")
+        } finally { dl.unpersist(); () }
+      } finally { cached.unpersist(); () }
+      ()
+    }
   }
 
   /** Column names of the retry carry-over state (not CAPTURE_PREFIX'd:
@@ -211,10 +214,9 @@ object StreamErrorHandling {
     * the store write and the checkpoint commit therefore replays batch
     * `N` against the UNTOUCHED `epoch=M` input and REWRITES `epoch=N` —
     * idempotent, no re-append, no double-incremented retry counts
-    * (StreamingSpec's replayed-trigger case pins this). Epochs below the
-    * one a trigger read are unreachable by any replay and are garbage-
-    * collected. Rows still pending when the stream stops remain in the
-    * store for the next run.
+    * (StreamingSpec's replayed-trigger case pins this) — the
+    * [[EpochStore]] contract, GC included. Rows still pending when the
+    * stream stops remain in the store for the next run.
     */
   def captureToDlqWithRetry(
       stream: DataFrame,
@@ -230,47 +232,16 @@ object StreamErrorHandling {
       pendingPath: String = null): StreamingQuery = {
     val pPath = Option(pendingPath).getOrElse(s"$checkpointPath/graft-pending")
     val captured = capture(stream, results, input)
-    captured.df.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processRetryTrigger(batch.toDF(), batchId, captured.resultNames,
-          results, input, description, valuesPath, dlqPath, pPath,
-          classifier, maxRetries, backoffMs, now = System.currentTimeMillis())
-      }
-      .start()
-  }
-
-  /** Epoch ids present in the pending store, ascending. */
-  private[graft] def pendingEpochs(spark: SparkSession, pendingPath: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(pendingPath)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .flatMap(st => st.getPath.getName match {
-        case n if n.startsWith("epoch=") => scala.util.Try(n.drop(6).toLong).toOption
-        case _ => None
-      })
-      .sorted
-  }
-
-  /** The pending rows a trigger with this `batchId` must consume: the
-    * newest epoch strictly below it (a replayed trigger's own crashed
-    * `epoch=batchId` write is thereby invisible to itself). None when
-    * the store has no prior epoch or the epoch dir holds no rows.
-    */
-  private[graft] def readPendingBefore(spark: SparkSession, pendingPath: String,
-      batchId: Long): Option[(Long, DataFrame)] =
-    pendingEpochs(spark, pendingPath).filter(_ < batchId).lastOption.flatMap { m =>
-      // an all-pending-retried trigger writes an empty dir (no parquet
-      // footer) — read it as "nothing pending", same as no dir at all
-      try Some(m -> spark.read.parquet(s"$pendingPath/epoch=$m"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    eachTrigger(captured.df, checkpointPath) { (batch, batchId) =>
+      processRetryTrigger(batch, batchId, captured.resultNames,
+        results, input, description, valuesPath, dlqPath, pPath,
+        classifier, maxRetries, backoffMs, now = System.currentTimeMillis())
     }
+  }
 
   /** Operational/test view: the current (latest-epoch) pending rows. */
   def readPending(spark: SparkSession, pendingPath: String): Option[DataFrame] =
-    readPendingBefore(spark, pendingPath, Long.MaxValue).map(_._2)
+    EpochStore(spark, pendingPath).before(Long.MaxValue)
 
   /** One trigger of the retry loop, factored out of foreachBatch so the
     * crash-replay contract is testable deterministically (`now` is
@@ -297,9 +268,10 @@ object StreamErrorHandling {
         lit(null).cast("timestamp").as("input_timestamp"))
     // no localCheckpoint pin needed: this trigger writes epoch=batchId
     // and never touches the epoch it reads
-    val readBack = readPendingBefore(spark, pendingPath, batchId)
-    val due = readBack.map(_._2.filter(col(NextAttemptTsCol) <= now))
-    val notDue = readBack.map(_._2.filter(col(NextAttemptTsCol) > now))
+    val pending = EpochStore(spark, pendingPath)
+    val readBack = pending.before(batchId)
+    val due = readBack.map(_.filter(col(NextAttemptTsCol) <= now))
+    val notDue = readBack.map(_.filter(col(NextAttemptTsCol) > now))
     // arriving rows enter at retry_count 0; due rows re-run the user
     // computation carrying their count. ONE persisted pass feeds the
     // three writes below — the user expression runs once per row per
@@ -331,18 +303,7 @@ object StreamErrorHandling {
         case None => retryable
         case Some(nd) => nd.unionByName(retryable)
       }
-      newPending.write.mode("overwrite").parquet(s"$pendingPath/epoch=$batchId")
-      // GC: of the epochs below batchId only the NEWEST is reachable (a
-      // replay of batchId re-reads exactly that one, never older) —
-      // collect the rest, including dirs stranded behind empty epochs
-      val prior = pendingEpochs(spark, pendingPath).filter(_ < batchId)
-      if (prior.size > 1) {
-        val p = new org.apache.hadoop.fs.Path(pendingPath)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        prior.dropRight(1).foreach { e =>
-          fs.delete(new org.apache.hadoop.fs.Path(p, s"epoch=$e"), true); ()
-        }
-      }
+      pending.commit(batchId, newPending)
     } finally { cachedAll.unpersist(); () }
     ()
   }
@@ -384,21 +345,17 @@ object StreamErrorHandling {
     * republishes. After `maxAttempts` a row gives up and lands
     * null-enriched WITH its attempt count visible — never silently
     * dropped, which is the failure mode this operator exists to
-    * prevent. Values are written append-per-epoch-dir (idempotent on
-    * replay); the pending store follows the retry-store crash
-    * contract.
+    * prevent. Values overwrite `batch_id=N` dirs (idempotent on
+    * replay); the pending store is an [[EpochStore]].
     */
   def enrichWithPendingRetry(stream: DataFrame, dimPath: String,
       keys: Seq[String], maxAttempts: Int, valuesPath: String,
       pendingPath: String, checkpointPath: String): StreamingQuery = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processEnrichRetryTrigger(batch.toDF(), batchId, dimPath, keys,
-          maxAttempts, valuesPath, pendingPath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processEnrichRetryTrigger(batch, batchId, dimPath, keys,
+        maxAttempts, valuesPath, pendingPath)
+    }
   }
 
   private[graft] def processEnrichRetryTrigger(batch: DataFrame,
@@ -407,10 +364,8 @@ object StreamErrorHandling {
     val spark = batch.sparkSession
     val dim = spark.read.parquet(dimPath).withColumn("__hit", lit(true))
     val incoming = batch.withColumn("__attempts", lit(0))
-    val all = readPendingBefore(spark, pendingPath, batchId) match {
-      case Some((_, pending)) => incoming.unionByName(pending)
-      case None => incoming
-    }
+    val store = EpochStore(spark, pendingPath)
+    val all = store.before(batchId).map(incoming.unionByName(_)).getOrElse(incoming)
     val joined = all.join(broadcast(dim), keys, "left_outer").localCheckpoint()
     val dimCols = dim.columns.filterNot(c => keys.contains(c) || c == "__hit")
     // matched: enriched rows out, bookkeeping stripped
@@ -424,9 +379,8 @@ object StreamErrorHandling {
       .drop("__hit").withColumnRenamed("__attempts", "attempts")
       .write.mode("overwrite").parquet(s"$valuesPath/batch_id=${batchId}_exhausted")
     // still pending: original shape + attempt count, epoch-keyed
-    missed.filter(col("__attempts") < maxAttempts)
-      .drop("__hit").drop(dimCols: _*)
-      .write.mode("overwrite").parquet(s"$pendingPath/epoch=$batchId")
+    store.commit(batchId, missed.filter(col("__attempts") < maxAttempts)
+      .drop("__hit").drop(dimCols: _*))
   }
 
   /** Late-data quarantine (ST18): rows a watermarked stateful operator
@@ -445,13 +399,10 @@ object StreamErrorHandling {
       valuesPath: String, latePath: String, statePath: String,
       checkpointPath: String): StreamingQuery = {
     require(delayMs >= 0, s"watermark delay must be >= 0 ms: $delayMs")
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processLateQuarantineTrigger(batch.toDF(), batchId, tsCol,
-          delayMs, valuesPath, latePath, statePath)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processLateQuarantineTrigger(batch, batchId, tsCol,
+        delayMs, valuesPath, latePath, statePath)
+    }
   }
 
   private[graft] def processLateQuarantineTrigger(batch: DataFrame,
@@ -459,8 +410,9 @@ object StreamErrorHandling {
       latePath: String, statePath: String): Unit = {
     val spark = batch.sparkSession
     val tsMs = expr(s"unix_micros(`$tsCol`) div 1000")
-    val priorWm: Long = readPendingBefore(spark, statePath, batchId)
-      .map(_._2.select(max(col("wm_ms"))).head.getLong(0))
+    val state = EpochStore(spark, statePath)
+    val priorWm: Long = state.before(batchId)
+      .map(_.select(max(col("wm_ms"))).head.getLong(0))
       .getOrElse(Long.MinValue)
     val stamped = batch.withColumn("__ms", tsMs).localCheckpoint()
     stamped.filter(col("__ms") >= priorWm).drop("__ms")
@@ -476,8 +428,7 @@ object StreamErrorHandling {
       if (batchMax.isNullAt(0)) Long.MinValue
       else batchMax.getLong(0) - delayMs)
     import spark.implicits._
-    Seq(newWm).toDF("wm_ms").coalesce(1)
-      .write.mode("overwrite").parquet(s"$statePath/epoch=$batchId")
+    state.commit(batchId, Seq(newWm).toDF("wm_ms").coalesce(1))
   }
 
   /** Unbounded-horizon streaming dedup via an accumulating Bloom state
@@ -498,53 +449,28 @@ object StreamErrorHandling {
   def dedupStreamingBloom(stream: DataFrame, keyCol: String,
       expectedItems: Long, fpp: Double, valuesPath: String,
       statePath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processBloomDedupTrigger(batch.toDF(), batchId, keyCol,
-          expectedItems, fpp, valuesPath, statePath)
-      }
-      .start()
-
-  private def bloomEpochs(statePath: String): Seq[(Long, java.nio.file.Path)] = {
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(statePath)
-    if (!java.nio.file.Files.exists(root)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(root)
-      try s.iterator().asScala.toSeq
-        .filter(_.getFileName.toString.startsWith("epoch="))
-        .map(p => (p.getFileName.toString.stripPrefix("epoch=").toLong,
-          p.resolve("bloom.bin")))
-        .sortBy(_._1)
-      finally s.close()
-    }
-  }
-
-  private[graft] def readBloomBefore(statePath: String, batchId: Long)
-      : Option[org.apache.spark.util.sketch.BloomFilter] =
-    bloomEpochs(statePath).filter(_._1 < batchId).lastOption.map { case (_, p) =>
-      org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(java.nio.file.Files.readAllBytes(p)))
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processBloomDedupTrigger(batch, batchId, keyCol,
+        expectedItems, fpp, valuesPath, statePath)
     }
 
   private[graft] def processBloomDedupTrigger(batch: DataFrame, batchId: Long,
       keyCol: String, expectedItems: Long, fpp: Double,
       valuesPath: String, statePath: String): Unit = {
+    import org.apache.spark.util.sketch.BloomFilter
     val spark = batch.sparkSession
     val inBatch = batch.dropDuplicates(keyCol) // exact within the trigger
-    val prior = readBloomBefore(statePath, batchId)
-    val fresh = prior match {
+    val state = EpochStore(spark, statePath)
+    val priorBytes = state.bytesBefore(batchId)
+    val prior = priorBytes.map(b => BloomFilter.readFrom(new java.io.ByteArrayInputStream(b)))
+    val fresh = priorBytes match {
       case None => inBatch
-      case Some(bf) =>
-        val bos = new java.io.ByteArrayOutputStream()
-        bf.writeTo(bos)
-        val bytes = spark.sparkContext.broadcast(bos.toByteArray)
+      case Some(b) =>
+        val bytes = spark.sparkContext.broadcast(b)
         val idx = inBatch.schema.fieldIndex(keyCol)
         val schema = inBatch.schema
         inBatch.mapPartitions { it =>
-          val local = org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes.value))
+          val local = BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes.value))
           // null keys never dedup (the sketch can't hold them): they
           // pass through rather than silently vanishing at the probe
           it.filter(r => r.isNullAt(idx) || !local.mightContain(r.get(idx)))
@@ -562,14 +488,11 @@ object StreamErrorHandling {
       case (Some(p), Some(n)) => p.mergeInPlace(n); p
       case (Some(p), None) => p
       case (None, Some(n)) => n
-      case (None, None) =>
-        org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
+      case (None, None) => BloomFilter.create(expectedItems, fpp)
     }
-    val dir = java.nio.file.Paths.get(s"$statePath/epoch=$batchId")
-    java.nio.file.Files.createDirectories(dir)
     val bos = new java.io.ByteArrayOutputStream()
     merged.writeTo(bos)
-    java.nio.file.Files.write(dir.resolve("bloom.bin"), bos.toByteArray)
+    state.commitBytes(batchId, bos.toByteArray)
   }
 
   /** Gap-based sessionization — the streaming twin of the batch q26
@@ -671,21 +594,18 @@ object StreamErrorHandling {
     */
   def trendingToSink(stream: DataFrame, tsCol: String, windowDur: String,
       watermarkDelay: String, keyCol: String, k: Int,
-      outPath: String, checkpointPath: String): StreamingQuery =
-    stream.withWatermark(tsCol, watermarkDelay)
+      outPath: String, checkpointPath: String): StreamingQuery = {
+    val counts = stream.withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowDur), col(keyCol))
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").cast("string").as("window_start"),
         col(keyCol), col("n"))
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.TopK.perKey(batch.toDF(), Seq("window_start"),
-            Seq(graft.operators.TopK.desc("n"), graft.operators.TopK.asc(keyCol)), k)
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        ()
-      }
-      .start()
+    eachTrigger(counts, checkpointPath) { (batch, batchId) =>
+      graft.operators.TopK.perKey(batch, Seq("window_start"),
+          Seq(graft.operators.TopK.desc("n"), graft.operators.TopK.asc(keyCol)), k)
+        .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+    }
+  }
 
   /** Streaming data-contract gate: per trigger, rows passing every
     * expectation rule land in the values sink, violators land in the
@@ -703,25 +623,20 @@ object StreamErrorHandling {
       valuesPath: String,
       dlqPath: String,
       checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // one flagged scan feeds both sinks
-        val flagged = graft.operators.Pipeline
-          .expectations(batch.toDF(), rules).persist()
-        try {
-          val okCols = rules.map { case (n, _) => s"ok_$n" } :+ "quarantined"
-          flagged.filter(!col("quarantined"))
-            .drop(okCols: _*)
-            .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
-          graft.operators.Pipeline
-            .quarantineToDeadLetters(flagged.drop(okCols: _*), rules,
-              input, description)
-            .write.mode("overwrite").parquet(s"$dlqPath/batch_id=$batchId")
-        } finally { flagged.unpersist(); () }
-        ()
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      // one flagged scan feeds both sinks
+      val flagged = graft.operators.Pipeline.expectations(batch, rules).persist()
+      try {
+        val okCols = rules.map { case (n, _) => s"ok_$n" } :+ "quarantined"
+        flagged.filter(!col("quarantined"))
+          .drop(okCols: _*)
+          .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
+        graft.operators.Pipeline
+          .quarantineToDeadLetters(flagged.drop(okCols: _*), rules,
+            input, description)
+          .write.mode("overwrite").parquet(s"$dlqPath/batch_id=$batchId")
+      } finally { flagged.unpersist(); () }
+    }
 
   /** One trigger of the streaming contamination gate — the body shared
     * by [[contaminationGate]]'s foreachBatch and the replay proof
@@ -789,13 +704,10 @@ object StreamErrorHandling {
       minLogWeight: Double, keptPath: String, rejectedPath: String,
       checkpointPath: String, textCol: String = "text",
       hexChars: Int = 2): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processDsirTrigger(batch.toDF(), batchId, modelNanos, minLogWeight,
-          keptPath, rejectedPath, textCol, hexChars)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processDsirTrigger(batch, batchId, modelNanos, minLogWeight,
+        keptPath, rejectedPath, textCol, hexChars)
+    }
 
   /** One trigger of the ST36 classifier gate (the ST35 shape with the
     * trained logistic model instead of the DSIR bucket LMs).
@@ -848,13 +760,10 @@ object StreamErrorHandling {
       minWords: Long = 50L, maxWords: Long = 100000L,
       stopwords: Seq[String] = graft.operators.TextAnalysis.GopherStopwords,
       textCol: String = "text"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processGopherTrigger(batch.toDF(), batchId, minWords, maxWords,
-          stopwords, keptPath, rejectedPath, textCol)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processGopherTrigger(batch, batchId, minWords, maxWords,
+        stopwords, keptPath, rejectedPath, textCol)
+    }
 
   /** Streaming trained-classifier quality gate (ST36): t34's live face
     * — the model trains batch-side (`trainQualityModel`, 10 doubles)
@@ -869,13 +778,10 @@ object StreamErrorHandling {
       model: graft.operators.TextAnalysis.QualityModel, minScore: Double,
       keptPath: String, rejectedPath: String, checkpointPath: String,
       textCol: String = "text"): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processClassifierTrigger(batch.toDF(), batchId, model, minScore,
-          keptPath, rejectedPath, textCol)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processClassifierTrigger(batch, batchId, model, minScore,
+        keptPath, rejectedPath, textCol)
+    }
 
   /** Streaming benchmark-contamination gate (ST30): a live ingest
     * pipeline checks every arriving document against the eval suite's
@@ -893,13 +799,10 @@ object StreamErrorHandling {
       textCol: String = "text", idCol: String = "doc_id"): StreamingQuery = {
     val grams = graft.operators.Pipeline
       .evalGramSet(evalSet, n, textCol, idCol).localCheckpoint()
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        processContaminationTrigger(batch.toDF(), batchId, grams, n,
-          cleanPath, flaggedPath, textCol, idCol)
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processContaminationTrigger(batch, batchId, grams, n,
+        cleanPath, flaggedPath, textCol, idCol)
+    }
   }
 
   /** Stream-static enrichment (slowly-changing dimension): every
@@ -908,21 +811,25 @@ object StreamErrorHandling {
     * dim rebuild) enriches subsequent batches with the new attributes;
     * plain parquet static DataFrames cache their file listing at plan
     * time and would keep serving the old snapshot (or break on an
-    * overwrite), which is why the read lives inside foreachBatch. The
+    * overwrite), which is why the read lives inside the trigger. The
     * dim is broadcast: enrichment is map-side, the stream never
     * shuffles. Left-outer keeps unmatched events (dims lag facts).
+    * Each trigger owns `valuesPath/batch_id=N` and overwrites it, so a
+    * crash-replayed trigger rewrites its rows instead of appending them
+    * twice.
     */
   def enrichToSink(stream: DataFrame, dimPath: String, keys: Seq[String],
       valuesPath: String, checkpointPath: String): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val dim = batch.sparkSession.read.parquet(dimPath)
-        batch.join(broadcast(dim), keys, "left_outer")
-          .write.mode("append").parquet(valuesPath)
-        ()
-      }
-      .start()
+    eachTrigger(stream, checkpointPath) { (batch, batchId) =>
+      processEnrichTrigger(batch, batchId, dimPath, keys, valuesPath)
+    }
+
+  private[graft] def processEnrichTrigger(batch: DataFrame, batchId: Long,
+      dimPath: String, keys: Seq[String], valuesPath: String): Unit = {
+    val dim = batch.sparkSession.read.parquet(dimPath)
+    batch.join(broadcast(dim), keys, "left_outer")
+      .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
+  }
 
   /** State for [[funnelDetect]]: the running min signup time plus the
     * compressed purchase-time set — every purchase at or before the
