@@ -13,6 +13,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     Graft.allFns.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.ErrorTeeStrategy)
   }
 }
 
@@ -77,8 +78,9 @@ object Graft {
   /** Install graft's planner strategies (idempotent). */
   def registerStrategies(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraStrategies
-    if (!cur.contains(graft.plans.TopKPerKeyStrategy))
-      spark.experimental.extraStrategies = cur :+ graft.plans.TopKPerKeyStrategy
+    val missing = Seq(graft.plans.TopKPerKeyStrategy, graft.plans.ErrorTeeStrategy)
+      .filterNot(cur.contains)
+    if (missing.nonEmpty) spark.experimental.extraStrategies = cur ++ missing
   }
 }
 

@@ -1,18 +1,48 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
-import graft.functions.TryCapture
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSet, EquivalentExpressions, Expression, Generator, InputFileBlockLength, InputFileBlockStart, InputFileName, PlanExpression, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.{ColumnBridge, DatasetBridge}
+import org.apache.spark.storage.StorageLevel
+
+import graft.functions.{CaptureReplay, Fence, TryCapture}
+import graft.plans.{ErrorRowsSlot, ErrorTeePlan}
 
 /** DataFrame-level error capture: the Spark-first re-expression of the
   * reference's `captureErrors(...)` topology pattern (README.md usage;
   * ErrorCapturingKeyValueMapper.java).
   *
   * One projection computes `struct<value, error_class, error_message,
-  * stack_trace>` per output column; `values` / `errors` are cheap filters
-  * over it, and Catalyst prunes the unused half of the struct in each
-  * branch — no double computation, no RDD round-trip.
+  * stack_trace>` per output column; `values` and `errors` filter it.
+  *
+  * Single-scan contract (batch frames): each record is captured once
+  * when the values branch is consumed before the error branch.
+  *  - The values action pays the scan. Its plan tees the capture output
+  *    ([[graft.plans.ErrorTeePlan]], shown as `ErrorTee`): each
+  *    partition's error rows go into the blocks of a persisted RDD that
+  *    is derived from that same execution's capture RDD.
+  *  - The error rows live in that RDD. `errors`, `deadLetters`,
+  *    `filterRecoverable` and `withErrorHeaders` built after the values
+  *    action read it instead of scanning again. A partition without a
+  *    block (a limit, a failed task, an evicted block) recomputes
+  *    through the same lineage, so the error branch never depends on
+  *    the values action having finished.
+  *  - Each values execution replaces the frame's RDD. Spark's
+  *    ContextCleaner frees an RDD's blocks once neither the frame nor
+  *    an error branch built from it is reachable.
+  *  - The error branch scans when it is built before any values
+  *    execution, when the frame's `df` is cached (the scan then reads
+  *    the cache), when the values plan pruned a column the branch reads,
+  *    and when its columns call `input_file_name()` and friends, which
+  *    only a scan of the source can answer.
+  *  - Streaming frames keep the two filter scans: their rows belong to
+  *    one micro-batch, and an RDD cannot span micro-batches.
   */
 final case class ErrorFrame private (
     df: DataFrame,
@@ -21,6 +51,9 @@ final case class ErrorFrame private (
 
   import ErrorFrame._
 
+  /** Where values executions leave this frame's error rows. */
+  private lazy val errorSlot = new ErrorRowsSlot
+
   private def anyError: Column =
     resultNames.map(n => col(capturedCol(n))(ERROR_CLASS).isNotNull).reduce(_ || _)
 
@@ -28,6 +61,16 @@ final case class ErrorFrame private (
     resultNames.foldRight(lit(null).cast("string")) { (n, acc) =>
       when(col(capturedCol(n))(ERROR_CLASS).isNotNull, col(capturedCol(n))(field)).otherwise(acc)
     }
+
+  /** The input's own columns, without capture internals. */
+  private def kept: Seq[Column] =
+    df.columns.filterNot(_.startsWith(CAPTURE_PREFIX)).map(col).toSeq
+
+  /** Id of the RDD holding the error rows of the latest values
+    * execution, if there was one.
+    */
+  private[graft] def errorRowsRddId: Option[Int] =
+    errorSlot.rowsWith(Nil).map(_.rdd.id)
 
   /** Record lineage, the analog of the reference's live record context
     * (ErrorHeaderProcessor.java:54–76 reads topic/partition/offset off the
@@ -74,22 +117,63 @@ final case class ErrorFrame private (
   /** Successfully processed rows: original columns minus capture internals,
     * plus the unwrapped result columns (ProcessedKeyValue::getValues).
     */
-  def values: DataFrame = {
-    val unwrapped = resultNames.map(n => col(capturedCol(n))(VALUE).as(n))
-    val kept = df.columns.filterNot(_.startsWith(CAPTURE_PREFIX)).map(col).toSeq
-    df.filter(!anyError).select(kept ++ unwrapped: _*)
+  def values: DataFrame =
+    successes(if (df.isStreaming || df.storageLevel != StorageLevel.NONE) df else teed)
+
+  private def successes(rows: DataFrame): DataFrame =
+    rows.filter(!anyError).select(
+      kept ++ resultNames.map(n => col(capturedCol(n))(VALUE).as(n)): _*)
+
+  /** `df` under an [[ErrorTeePlan]] that leaves its error rows in this
+    * frame's slot.
+    */
+  private def teed: DataFrame = {
+    val spark = df.sparkSession
+    graft.Graft.registerStrategies(spark)
+    val isError = DatasetBridge.logicalPlan(df.filter(anyError)) match {
+      case Filter(cond, _) => cond
+    }
+    DatasetBridge.ofRows(spark, ErrorTeePlan(isError, errorSlot, DatasetBridge.logicalPlan(df)))
   }
 
-  /** Failed rows: original columns plus error_class / error_message /
-    * stack_trace of the first failing output (ProcessedKeyValue::getErrors).
+  /** The failing rows of `df`: those the latest values execution left
+    * behind when they carry every column the error branch reads and
+    * `cols` need no source scan, otherwise a filter scan.
     */
-  def errors: DataFrame = {
-    val kept = df.columns.filterNot(_.startsWith(CAPTURE_PREFIX)).map(col).toSeq
-    df.filter(anyError).select(kept ++ Seq(
+  private def errorRows(cols: Column*): DataFrame = {
+    val needed = DatasetBridge.logicalPlan(df).output.filter { a =>
+      !a.name.startsWith(CAPTURE_PREFIX) || resultNames.exists(capturedCol(_) == a.name)
+    }
+    errorSlot.rowsWith(needed).filterNot(_ => readsSource(cols)) match {
+      case Some(r) => DatasetBridge.ofRdd(df.sparkSession, r.output, r.rdd, r.stats)
+      case None => df.filter(anyError)
+    }
+  }
+
+  /** Some column, resolved against `df`, asks for the source file of
+    * its row; a column that does not resolve counts as asking.
+    */
+  private def readsSource(cols: Seq[Column]): Boolean = cols.nonEmpty && {
+    try DatasetBridge.logicalPlan(df.select(cols: _*)).expressions.exists(_.exists {
+      case _: InputFileName | _: InputFileBlockStart | _: InputFileBlockLength => true
+      case _ => false
+    }) catch { case NonFatal(_) => true }
+  }
+
+  private def withFirstError(rows: DataFrame): DataFrame =
+    rows.select(kept ++ Seq(
       firstError(ERROR_CLASS).as("error_class"),
       firstError(ERROR_MESSAGE).as("error_message"),
       firstError(STACK_TRACE).as("stack_trace")): _*)
-  }
+
+  /** Failed rows: original columns plus error_class / error_message /
+    * stack_trace of the first failing output (ProcessedKeyValue::getErrors).
+    * Built after a values action it reads the rows that action left
+    * behind, which have no source file: `input_file_name()` over it reads
+    * empty (the `withLineage` forms of [[deadLetters]] and
+    * [[withErrorHeaders]] scan the source instead).
+    */
+  def errors: DataFrame = withFirstError(errorRows())
 
   /** All rows in ONE pass with per-column fallback substitution — the
     * "default value on error" recovery mode production pipelines reach
@@ -109,7 +193,6 @@ final case class ErrorFrame private (
       val c = col(capturedCol(n))
       when(c(ERROR_CLASS).isNotNull, defaults(n)).otherwise(c(VALUE)).as(n)
     }
-    val kept = df.columns.filterNot(_.startsWith(CAPTURE_PREFIX)).map(col).toSeq
     df.select(kept ++ unwrapped :+ anyError.as("recovered"): _*)
   }
 
@@ -124,9 +207,8 @@ final case class ErrorFrame private (
       timestampCol: Option[Column] = None,
       withLineage: Boolean = false,
       lineageCols: Option[(Column, Column, Column)] = None): DataFrame = {
-    val base = errors
     val (topicC, partC, offC) = lineageOf(withLineage, lineageCols)
-    base.select(
+    withFirstError(errorRows(Seq(inputCol, topicC, partC, offC) ++ timestampCol: _*)).select(
       inputCol.cast("string").as("input_value"),
       topicC.as("topic"),
       partC.as("partition"),
@@ -148,7 +230,6 @@ final case class ErrorFrame private (
     * branch.
     */
   def annotated: DataFrame = {
-    val kept = df.columns.filterNot(_.startsWith(CAPTURE_PREFIX)).map(col).toSeq
     val unwrapped = resultNames.map(n => col(capturedCol(n))(VALUE).as(n))
     df.select(kept ++ unwrapped ++ Seq(
       anyError.as("is_error"),
@@ -183,7 +264,7 @@ final case class ErrorFrame private (
         !isErr
       }
     }(org.apache.spark.sql.Encoders.row(schema))
-    ErrorFrame(logged.drop(IS_ERR_COL, LOG_COL), resultNames, inputCol).values
+    successes(logged.drop(IS_ERR_COL, LOG_COL))
   }
 
   /** Original value + Kafka-sink-compatible error headers
@@ -203,7 +284,6 @@ final case class ErrorFrame private (
       lineageCols: Option[(Column, Column, Column)] = None): DataFrame = {
     def h(key: String, value: Column) =
       struct(lit(key).as("key"), value.cast("binary").as("value"))
-    val kept = df.columns.filterNot(_.startsWith(CAPTURE_PREFIX)).map(col).toSeq
     val (topicC, partC, offC) = lineageOf(withLineage, lineageCols)
     val base = Seq(
       h(ErrorHeaders.TOPIC, topicC.cast("string")),
@@ -216,7 +296,7 @@ final case class ErrorFrame private (
     val ctx = if (withTaskContext) Seq(
       h(ErrorHeaders.TASK_ID, spark_partition_id().cast("string")),
       h(ErrorHeaders.PROCESSOR_NODE_ID, lit(description))) else Nil
-    df.filter(anyError).select(kept :+ array(base ++ ctx: _*).as("headers"): _*)
+    errorRows(topicC, partC, offC).select(kept :+ array(base ++ ctx: _*).as("headers"): _*)
   }
 
   /** Recoverability split (ErrorUtil.isRecoverable + ErrorFilter +
@@ -315,22 +395,93 @@ object ErrorFrame {
     *
     * `input` is the "record value" used for DLQ stringification
     * (ErrorUtil.toString analog); defaults to a JSON rendering of the
-    * whole input row.
-    */
-  /** `stackTraces = false` skips stack-trace rendering per error — use
-    * when downstream only consumes class/message (cheaper hot path).
+    * whole input row. `stackTraces = false` skips stack-trace rendering
+    * per error — use when downstream only consumes class/message
+    * (cheaper hot path).
+    *
+    * A deterministic subexpression that two or more results share is
+    * computed once per row, in a hidden `__graft_captured_shared_<i>`
+    * capture ([[shareSubexpressions]]); each column still reports the
+    * error it would report on its own.
     */
   def captureErrors(df: DataFrame, results: Map[String, Column], input: Column,
       stackTraces: Boolean = true): ErrorFrame = {
+    val (withShared, columns) = shareSubexpressions(df, results.toSeq)
     // The Fence pins each capture struct to ONE evaluation per row:
     // without it, predicate pushdown inlines try_capture into downstream
     // branch filters (and header/generate-inferred filters), re-throwing
     // and re-rendering every error multiple times per scan.
-    val withCaptured = results.foldLeft(df) { case (d, (name, c)) =>
-      d.withColumn(capturedCol(name), graft.functions.Fence(TryCapture(c, stackTraces)))
+    val withCaptured = columns.foldLeft(withShared) { case (d, (name, c)) =>
+      d.withColumn(capturedCol(name), Fence(TryCapture(c, stackTraces)))
     }
     ErrorFrame(withCaptured, results.keys.toSeq, input)
   }
+
+  /** Hoists each deterministic subexpression that two or more of
+    * `results` share into one hidden capture column of `df`, found with
+    * Catalyst's EquivalentExpressions over the resolved results, largest
+    * first. Each use site becomes a [[CaptureReplay]]: the shared value,
+    * or on a failed row its own copy of the subexpression, which throws
+    * what it would have thrown unshared. A shared capture no column
+    * reaches (an untaken CASE branch) reports nothing.
+    */
+  private def shareSubexpressions(df: DataFrame,
+      results: Seq[(String, Column)]): (DataFrame, Seq[(String, Column)]) = {
+    val resolved = if (results.size < 2) None else
+      try DatasetBridge.logicalPlan(df.select(results.map { case (n, c) => c.as(n) }: _*)) match {
+        case Project(list, _) => Some(list.collect { case Alias(e, _) => e })
+          .filter(_.size == results.size)
+        case _ => None
+      } catch { case NonFatal(_) => None }
+    resolved.fold((df, results)) { exprs =>
+      val inputs = DatasetBridge.logicalPlan(df).outputSet
+      val equivalent = new EquivalentExpressions
+      exprs.foreach(equivalent.addExprTree(_))
+      val taken = df.columns.toSet ++ results.map(r => capturedCol(r._1))
+      val names = Iterator.from(0).map(i => capturedCol(s"shared_$i")).filterNot(taken)
+      val (shared, rewritten) = equivalent.getCommonSubexpressions
+        .filter(shareable(_, inputs)).sortBy(-_.height)
+        .foldLeft((Vector.empty[(String, Expression)], exprs)) { case ((sh, es), c) =>
+          if (es.count(occurs(_, c)) < 2) (sh, es) else {
+            val name = names.next()
+            (sh :+ (name -> c), es.map(replace(_, c, UnresolvedAttribute.quoted(name))))
+          }
+        }
+      if (shared.isEmpty) (df, results) else {
+        val withShared = df.withColumns(scala.collection.immutable.ListMap(shared.map {
+          case (name, c) => name -> Fence(TryCapture(ColumnBridge.column(c), withStackTrace = false))
+        }: _*))
+        val attrs = DatasetBridge.logicalPlan(withShared).output.map(a => a.name -> a).toMap
+        val columns = results.zip(exprs.zip(rewritten)).map { case ((n, c), (before, after)) =>
+          if (after eq before) n -> c
+          else n -> ColumnBridge.column(after.transform {
+            case CaptureReplay(u: UnresolvedAttribute, o) => CaptureReplay(attrs(u.name), o)
+          })
+        }
+        (withShared, columns)
+      }
+    }
+  }
+
+  private def shareable(e: Expression, inputs: AttributeSet): Boolean =
+    e.deterministic && !e.foldable && e.references.subsetOf(inputs) && !e.exists {
+      case _: AggregateExpression | _: WindowExpression | _: PlanExpression[_] | _: Generator =>
+        true
+      case _ => false
+    }
+
+  /** `c` occurs in `e` outside the use sites already replaced. */
+  private def occurs(e: Expression, c: Expression): Boolean = e match {
+    case _: CaptureReplay => false
+    case _ => e.semanticEquals(c) || e.children.exists(occurs(_, c))
+  }
+
+  private def replace(e: Expression, c: Expression, captured: Expression): Expression = e match {
+    case _: CaptureReplay => e
+    case _ if e.semanticEquals(c) => CaptureReplay(captured, e)
+    case _ => e.withNewChildren(e.children.map(replace(_, c, captured)))
+  }
+
 
   def captureErrors(df: DataFrame, results: Map[String, Column]): ErrorFrame =
     captureErrors(df, results, to_json(struct(df.columns.map(col).toSeq: _*)))

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{ConditionalExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -20,9 +20,15 @@ import graft.core.{model, GraftErrors}
   * analog of the reference's per-record try/catch in
   * ErrorCapturingValueMapper.java:~63 (captureErrors) re-expressed as a
   * codegen'd expression so the happy path stays inside WholeStageCodegen.
+  *
+  * A [[ConditionalExpression]] with no always-evaluated input: nothing
+  * inside it may run outside its try block. Otherwise subexpression
+  * elimination hoists a subexpression that appears twice in `child`
+  * (`cast(s AS INT) + cast(s AS INT)`) in front of the projection, and
+  * its error fails the task instead of being captured.
   */
 case class TryCapture(child: Expression, withStackTrace: Boolean = true)
-    extends UnaryExpression {
+    extends UnaryExpression with ConditionalExpression {
 
   override def dataType: DataType = model.capturedStructType(child.dataType)
 
@@ -30,11 +36,14 @@ case class TryCapture(child: Expression, withStackTrace: Boolean = true)
 
   override def prettyName: String = "try_capture"
 
-  // Must be foldable whenever the child is: otherwise ConstantFolding
-  // evaluates the bare child at planning time and a throwing constant
-  // fails the query before capture applies. Folding TryCapture itself is
-  // safe — it goes through eval(), which catches.
-  override def foldable: Boolean = child.foldable
+  // ConditionalExpression makes this foldable whenever the child is,
+  // which must hold: otherwise ConstantFolding evaluates the bare child
+  // at planning time and a throwing constant fails the query before
+  // capture applies. Folding TryCapture itself is safe — it goes
+  // through eval(), which catches.
+  override def alwaysEvaluatedInputs: Seq[Expression] = Nil
+  override def withNewAlwaysEvaluatedInputs(inputs: Seq[Expression]): TryCapture = this
+  override def branchGroups: Seq[Seq[Expression]] = Nil
 
   override def eval(input: InternalRow): Any =
     try {
