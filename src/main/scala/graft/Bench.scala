@@ -81,6 +81,26 @@ object Bench {
     (merged, warnings.result())
   }
 
+  // plain-decimal, locale-pinned serialization: Double.toString uses
+  // scientific notation under 1e-3, and %f under a comma-decimal
+  // locale would write 0,6 — invalid JSON (ADVICE r9)
+  private def dec(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
+
+  /** The artifact's one line: every query's seconds and their total. */
+  def jsonLine(m: Seq[(String, Double)], sfDir: String, cpus: String): String = {
+    val qs = m.map { case (k, v) => "\"" + k + "\":" + dec(v) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${dec(m.map(_._2).sum)},"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
+  }
+
+  /** The last stdout line: the total of [[jsonLine]], the query count
+    * and where the per-query artifact went, short enough for any tail.
+    */
+  def compactLine(m: Seq[(String, Double)], sfDir: String, cpus: String,
+      artifact: String): String =
+    s"""{"metric":"total","value":${dec(m.map(_._2).sum)},"n":${m.size},"sf":"$sfDir","cpus":$cpus,"artifact":"$artifact"}"""
+
   val defaultSfDir = "/root/testdata/sf0.1"
   val defaultCpus = "32"
 
@@ -250,16 +270,6 @@ object Bench {
       mergeRuns(prior, results.toMap, SparkEntry.queries.keySet,
         acceptDrift = acceptDrift)
     warnings.foreach(w => System.err.println(s"[bench] $w"))
-    // plain-decimal, locale-pinned serialization: Double.toString uses
-    // scientific notation under 1e-3, and %f under a comma-decimal
-    // locale would write 0,6 — invalid JSON (ADVICE r9)
-    def dec(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
-    def jsonLine(m: Seq[(String, Double)]): String = {
-      val qs = m.map { case (k, v) => "\"" + k + "\":" + dec(v) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${dec(m.map(_._2).sum)},"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
-    }
     // Durable copy FIRST: the driver captures only a stdout TAIL, which
     // has truncated the per-query map in past rounds (BENCH_r06 lost
     // 94/160 times). The FILE gets the gated merge (the drift baseline
@@ -268,14 +278,16 @@ object Bench {
     // prior was read, so the merge prior and the overwrite target
     // agree).
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), jsonLine(merged) + "\n")
+      java.nio.file.Paths.get(outPath), jsonLine(merged, sfDir, cpus) + "\n")
     catch { case t: Throwable => System.err.println(s"[bench] write $outPath failed: $t") }
     // The printed line is the RAW run, not the merge (VERDICT r14 task
     // 2): the tail gate protects the committed artifact from contended
     // outliers, but ground truth reported to the driver must never be
     // rewritten to a historical value — a genuine >2x regression has to
-    // be visible in stdout. Printed LAST so a stdout tail keeps it.
-    println(jsonLine(results))
+    // be visible in stdout. The compact line follows it, so a stdout
+    // tail of 2000 chars still parses the total.
+    println(jsonLine(results, sfDir, cpus))
+    println(compactLine(results, sfDir, cpus, outPath))
     spark.stop()
   }
 }

@@ -44,9 +44,10 @@ object MakeSf1 {
     // divisible by the small moduli queries use; override when composing
     // (a second 10x pass over an sf1 output needs a 100M stride)
     val stride = args.lift(3).map(_.toLong).getOrElse(10000000L)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

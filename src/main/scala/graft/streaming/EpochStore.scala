@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The epoch-keyed state store every stateful streaming member keeps:
   * trigger `N` reads the newest `epoch=M` with `M < N` ([[before]]) and
@@ -17,9 +18,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * trigger. Epochs above `N` are never touched.
   *
   * An epoch that exists but holds no readable rows (a trigger that
-  * committed an empty frame writes a dir with no parquet footer) reads
-  * as "none" — the same as no epoch at all; it never falls back to an
-  * older epoch.
+  * committed an empty frame writes a dir with no parquet footer, a torn
+  * write lacks its `_SUCCESS` marker) reads as "none" — the same as no
+  * epoch at all; it never falls back to an older epoch.
+  *
+  * A commit records the frame's schema beside its parquet files, and a
+  * read uses it, so reading state costs no schema-inference job. An
+  * epoch without the record (written before it existed) still reads,
+  * by inference.
   */
 private[graft] final case class EpochStore(spark: SparkSession, path: String) {
 
@@ -29,6 +35,8 @@ private[graft] final case class EpochStore(spark: SparkSession, path: String) {
   // file name of a blob epoch — named for its one user, the Bloom dedup
   // filter, so stores written before this class stay readable
   private val Blob = "bloom.bin"
+  // Spark's file listing skips names starting with `_`
+  private val SchemaFile = "_graft_schema.json"
 
   /** Epoch ids present, ascending; names that do not parse are ignored. */
   def epochs: Seq[Long] =
@@ -46,28 +54,42 @@ private[graft] final case class EpochStore(spark: SparkSession, path: String) {
   /** The state a trigger `n` consumes: the newest epoch below `n`. */
   def before(n: Long): Option[DataFrame] =
     newestBelow(n).flatMap { m =>
-      try Some(spark.read.parquet(dir(m).toString))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+      val names = fs.listStatus(dir(m)).map(_.getPath.getName).toSet
+      if (!names("_SUCCESS") || !names.exists(_.startsWith("part-"))) None
+      else {
+        val schema = Option.when(names(SchemaFile))(
+          DataType.fromJson(new String(readAll(new Path(dir(m), SchemaFile)), "UTF-8"))
+            .asInstanceOf[StructType])
+        try Some(schema.fold(spark.read)(spark.read.schema).parquet(dir(m).toString))
+        catch { case _: org.apache.spark.sql.AnalysisException => None }
+      }
     }
 
-  /** Overwrite `epoch=n` with `df`, then GC. */
+  /** Overwrite `epoch=n` with `df`, record its schema, then GC. */
   def commit(n: Long, df: DataFrame): Unit = {
     df.write.mode("overwrite").parquet(dir(n).toString)
+    write(new Path(dir(n), SchemaFile), df.schema.json.getBytes("UTF-8"))
     gc(n)
   }
 
   /** [[before]] for a store whose epochs hold one opaque blob. */
   def bytesBefore(n: Long): Option[Array[Byte]] =
-    newestBelow(n).map(m => new Path(dir(m), Blob)).filter(fs.exists).map { p =>
-      val in = fs.open(p)
-      try in.readAllBytes() finally in.close()
-    }
+    newestBelow(n).map(m => new Path(dir(m), Blob)).filter(fs.exists).map(readAll)
 
   /** [[commit]] for a store whose epochs hold one opaque blob. */
   def commitBytes(n: Long, bytes: Array[Byte]): Unit = {
-    val out = fs.create(new Path(dir(n), Blob), true)
-    try out.write(bytes) finally out.close()
+    write(new Path(dir(n), Blob), bytes)
     gc(n)
+  }
+
+  private def readAll(p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  private def write(p: Path, bytes: Array[Byte]): Unit = {
+    val out = fs.create(p, true)
+    try out.write(bytes) finally out.close()
   }
 
   private def gc(n: Long): Unit =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, min, when}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import StreamErrorHandling.eachTrigger
+import StreamErrorHandling.{eachTrigger, writeSinks}
 
 /** Streaming materialized-view maintenance — the streaming twin of
   * `Pipeline.refreshAggState` (x8): every micro-batch folds into a
@@ -198,10 +198,11 @@ object StreamAggState {
     val admitted = withPrior.filter(col("__rn") <= col("__room"))
       .drop("__rn", "__room", "n_admitted")
     // values/rejected BEFORE the state epoch (family crash contract)
-    admitted.write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
-    pinned.join(admitted.select(col("doc_id").as("__adm")),
-        col("doc_id") === col("__adm"), "left_anti")
-      .write.mode("overwrite").parquet(s"$rejectedPath/batch_id=$batchId")
+    writeSinks(
+      admitted -> s"$valuesPath/batch_id=$batchId",
+      pinned.join(admitted.select(col("doc_id").as("__adm")),
+          col("doc_id") === col("__adm"), "left_anti") ->
+        s"$rejectedPath/batch_id=$batchId")
     val increments = withPrior.filter(col("__rn") <= col("__room"))
       .groupBy(col(domainCol)).agg(count(lit(1)).as("n_new"))
     val store = prior.getOrElse(

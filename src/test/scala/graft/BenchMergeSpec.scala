@@ -105,6 +105,23 @@ class BenchMergeSpec extends AnyFunSuite {
     assert(warnings.isEmpty)
   }
 
+  test("the compact last line fits a stdout tail and carries the full line's total") {
+    // registry-sized: the full per-query line overflows a 2000-char tail
+    val run = (1 to 232).map(i => f"q$i%03d_registry_query" -> i / 1000.0)
+    val full = Bench.jsonLine(run, Bench.defaultSfDir, "4")
+    val compact = Bench.compactLine(run, Bench.defaultSfDir, "4", "bench_out.c4.json")
+    assert(full.length > 2000 && compact.length < 200, compact)
+    val value = """"value":([0-9.]+)""".r
+    assert(value.findFirstMatchIn(compact).map(_.group(1)) ===
+      value.findFirstMatchIn(full).map(_.group(1)))
+    assert(compact === """{"metric":"total","value":27.028000,"n":232,""" +
+      """"sf":"/root/testdata/sf0.1","cpus":4,"artifact":"bench_out.c4.json"}""")
+    // a first run's raw line is the artifact it writes, and it parses back
+    val (merged, _) = Bench.mergeRuns(Map.empty, run.toMap, run.map(_._1).toSet)
+    assert(Bench.jsonLine(merged, Bench.defaultSfDir, "4") === full)
+    assert(Bench.parsePrior(full, Bench.defaultSfDir, "4")._1 === run.toMap)
+  }
+
   // --- artifact path + prior guards (VERDICT r14 task 2: the driver's
   // 8-core scaling run merged into the 32-core bench_out.json, wiping
   // the full 32-core per-query record; cross-CPU must divert exactly

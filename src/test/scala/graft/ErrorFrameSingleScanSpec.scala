@@ -51,16 +51,35 @@ class ErrorFrameSingleScanSpec extends SparkSpec {
   private def valueIds(ef: ErrorFrame): Seq[Long] = ef.values.collect().map(_.getAs[Long]("id")).toSeq
   private def errorPairs(ef: ErrorFrame): Seq[(Long, String)] =
     ef.errors.select($"id", $"error_class").as[(Long, String)].collect().toSeq
+  private def readsOnlyTeedRows(df: DataFrame): Boolean =
+    df.queryExecution.executedPlan.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.execution.RDDScanExec])
 
   test("single scan: values then errors reads the teed rows, and they cover the input once") {
     val ef = frame()
     assert(ef.values.queryExecution.executedPlan.toString.contains("ErrorTee"))
     val v = valueIds(ef)
-    assert(ef.errors.queryExecution.executedPlan.collectLeaves()
-      .forall(_.isInstanceOf[org.apache.spark.sql.execution.RDDScanExec]))
+    assert(readsOnlyTeedRows(ef.errors))
     assertCovers(v, errorPairs(ef))
     // dead letters read the same rows
     assert(ef.deadLetters("d").count() == Rows - v.size)
+  }
+
+  test("single scan: after values.select(\"id\") errors scan again, and values plus errors cover the input once") {
+    val ef = frame()
+    val ids = ef.values.select($"id").as[Long].collect().toSeq
+    // the projection pruned the input columns below the tee
+    assert(!readsOnlyTeedRows(ef.errors))
+    assertCovers(ids, errorPairs(ef))
+  }
+
+  test("single scan: after values.count() dead letters scan again, and count the rest") {
+    val ef = frame()
+    val n = ef.values.count()
+    val letters = ef.deadLetters("d")
+    assert(!readsOnlyTeedRows(letters))
+    assert(letters.count() == Rows - n)
+    assertCovers(valueIds(frame()), errorPairs(ef))
   }
 
   test("single scan: errors first, then values") {

@@ -411,4 +411,34 @@ class StoreReplayPropertySpec extends SparkSpec {
     assert(blobs.epochs == Seq(1L, 2L))
     assert(blobs.bytesBefore(2L).map(_.toSeq).contains(Seq(1.toByte)))
   }
+
+  test("EpochStore: a read launches no job, an epoch without its schema record reads by inference, and one without _SUCCESS reads as none") {
+    val root = Files.createTempDirectory("graft-epoch-schema").toString
+    val store = EpochStore(spark, root)
+    store.commit(0L, Seq((1L, "a"), (2L, "b")).toDF("k", "v").repartition(2))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val state = try {
+      val s = store.before(1L)
+      org.apache.spark.sql.graftshim.ListenerDrain(spark.sparkContext)
+      s
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, "reading the epoch launched a schema-inference job")
+    assert(state.map(_.as[(Long, String)].collect().toSeq.sorted)
+      .contains(Seq((1L, "a"), (2L, "b"))))
+    // an epoch committed before commits recorded their schema
+    assert(new File(s"$root/epoch=0/_graft_schema.json").delete())
+    val inferred = store.before(1L)
+    assert(inferred.map(_.schema) == state.map(_.schema))
+    assert(inferred.map(_.as[(Long, String)].collect().toSeq.sorted)
+      .contains(Seq((1L, "a"), (2L, "b"))))
+    // a torn write keeps part of its files but loses the marker
+    new File(s"$root/epoch=0/_SUCCESS").delete()
+    assert(store.before(1L).isEmpty)
+  }
 }
