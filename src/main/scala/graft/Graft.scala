@@ -43,8 +43,8 @@ object Graft {
     fn("try_capture", classOf[TryCapture])(children => TryCapture(children.head))
 
   /** Every native graft expression, SQL-callable: capture, the hashing/
-    * shingling primitives behind dedup, the cosine fold, and the
-    * evaluate-once fence.
+    * shingling primitives behind dedup, the cosine fold and its exact
+    * integer twin, and the evaluate-once fence.
     */
   val allFns: Seq[FnReg] = Seq(
     tryCaptureFn,
@@ -57,6 +57,8 @@ object Graft {
       graft.functions.SimHashSig(c(0), litInt(c(1), "simhash_sig nBits"))),
     fn("vector_dot", classOf[graft.functions.VectorDot])(c =>
       graft.functions.VectorDot(c(0), c(1))),
+    fn("vector_dot_long", classOf[graft.functions.VectorDotLong])(c =>
+      graft.functions.VectorDotLong(c(0), c(1))),
     fn("count_by_value", classOf[graft.functions.CountByValue])(c =>
       graft.functions.CountByValue(c.head).toAggregateExpression()),
     fn("normalize_text", classOf[graft.functions.NormalizeText])(c =>

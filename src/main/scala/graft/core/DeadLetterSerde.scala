@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Serializers for dead-letter frames — the analog of the reference's
@@ -31,6 +31,16 @@ object DeadLetterSerde {
       |{"name":"input_timestamp","type":["null",{"type":"long","logicalType":"timestamp-millis"}],"default":null}
       |]}""".stripMargin
 
+  /** One dead letter, flattened: input_value, topic, partition, offset,
+    * description, the cause's error class, message and stack trace, and
+    * the input timestamp as a long.
+    */
+  private type Flat = (Option[String], Option[String], Option[Int], Option[Long], String,
+    Option[String], Option[String], Option[String], Option[Long])
+
+  // derived once: deriving a tuple encoder walks it by Scala reflection
+  private lazy val flatEncoder: Encoder[Flat] = Encoders.product[Flat]
+
   /** dead letters → single JSON string column `value`. */
   def toJsonValue(deadLetters: DataFrame): DataFrame =
     deadLetters.select(to_json(struct(deadLetters.columns.map(col).toSeq: _*)).as("value"))
@@ -51,8 +61,7 @@ object DeadLetterSerde {
       // the schema field is timestamp-millis: unix_millis keeps sub-second
       // precision (cast-to-long would truncate to whole seconds)
       unix_millis($"input_timestamp").as("input_epoch_ms"))
-      .as[(Option[String], Option[String], Option[Int], Option[Long], String,
-        Option[String], Option[String], Option[String], Option[Long])]
+      .as(flatEncoder)
       .mapPartitions { it =>
         val schema = new org.apache.avro.Schema.Parser().parse(schemaJson)
         val causeSchema = schema.getField("cause").schema()
@@ -78,7 +87,7 @@ object DeadLetterSerde {
           enc.flush()
           out.toByteArray
         }
-      }.toDF("value")
+      }(Encoders.BINARY).toDF("value")
   }
 
   /** dead letters → proto3 wire-format binary column `value` matching
@@ -97,11 +106,10 @@ object DeadLetterSerde {
       // Instant.getEpochSecond/getNano): unix_micros is the full precision
       // a Spark timestamp has
       unix_micros($"input_timestamp").as("epoch_us"))
-      .as[(Option[String], Option[String], Option[Int], Option[Long], String,
-        Option[String], Option[String], Option[String], Option[Long])]
+      .as(flatEncoder)
       .map { case (iv, topic, part, off, desc, ec, msg, st, ts) =>
         ProtoWire.deadLetter(desc, msg, st, ec, iv, topic, part, off, ts)
-      }.toDF("value")
+      }(Encoders.BINARY).toDF("value")
   }
 }
 

@@ -42,6 +42,7 @@ object Sinks {
       .withColumn("dlq_date", coalesce(to_date(col("input_timestamp")), lit("1970-01-01").cast("date")))
       .withColumn("error_class", coalesce(col("cause.error_class"), lit("unknown")))
       .write
+      .options(LocalFiles.writerOptions(deadLetters.sparkSession, path))
       .partitionBy("dlq_date", "error_class")
       .mode("append")
       .parquet(path)

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import graft.sources.LocalFiles
+
 /** The epoch-keyed state store every stateful streaming member keeps:
   * trigger `N` reads the newest `epoch=M` with `M < N` ([[before]]) and
   * overwrites `epoch=N` ([[commit]]). A trigger replayed after a crash
@@ -30,7 +32,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 private[graft] final case class EpochStore(spark: SparkSession, path: String) {
 
   private val root = new Path(path)
-  private lazy val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+  private lazy val fs = LocalFiles.fileSystem(spark, root)
   private def dir(n: Long): Path = new Path(root, s"epoch=$n")
   // file name of a blob epoch — named for its one user, the Bloom dedup
   // filter, so stores written before this class stay readable
@@ -67,7 +69,7 @@ private[graft] final case class EpochStore(spark: SparkSession, path: String) {
 
   /** Overwrite `epoch=n` with `df`, record its schema, then GC. */
   def commit(n: Long, df: DataFrame): Unit = {
-    df.write.mode("overwrite").parquet(dir(n).toString)
+    LocalFiles.writeParquet(df, dir(n).toString)
     write(new Path(dir(n), SchemaFile), df.schema.json.getBytes("UTF-8"))
     gc(n)
   }

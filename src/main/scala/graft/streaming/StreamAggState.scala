@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, min, when}
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.sources.LocalFiles
+
 import StreamErrorHandling.{eachTrigger, writeSinks}
 
 /** Streaming materialized-view maintenance — the streaming twin of
@@ -138,8 +140,8 @@ object StreamAggState {
     // values BEFORE the state epoch: a crash in between replays the
     // trigger, which rewrites both destinations idempotently (the
     // store was computed from epochs < N only)
-    Dedup.trimByRemovals(toks, removals, k)
-      .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
+    LocalFiles.writeParquet(Dedup.trimByRemovals(toks, removals, k),
+      s"$valuesPath/batch_id=$batchId")
     state.commit(batchId, store)
   }
 
@@ -198,10 +200,10 @@ object StreamAggState {
     val admitted = withPrior.filter(col("__rn") <= col("__room"))
       .drop("__rn", "__room", "n_admitted")
     // values/rejected BEFORE the state epoch (family crash contract)
-    writeSinks(
-      admitted -> s"$valuesPath/batch_id=$batchId",
-      pinned.join(admitted.select(col("doc_id").as("__adm")),
-          col("doc_id") === col("__adm"), "left_anti") ->
+    writeSinks(spark)(
+      (() => admitted) -> s"$valuesPath/batch_id=$batchId",
+      (() => pinned.join(admitted.select(col("doc_id").as("__adm")),
+          col("doc_id") === col("__adm"), "left_anti")) ->
         s"$rejectedPath/batch_id=$batchId")
     val increments = withPrior.filter(col("__rn") <= col("__room"))
       .groupBy(col(domainCol)).agg(count(lit(1)).as("n_new"))
@@ -248,8 +250,8 @@ object StreamAggState {
         .agg(org.apache.spark.sql.functions.sum(col("o")).as("o")))
       .getOrElse(batchCells)
       .localCheckpoint() // stats derivation AND the epoch write
-    graft.operators.Pipeline.chiSquareFromCells(store)
-      .write.mode("overwrite").parquet(s"$statsPath/batch_id=$batchId")
+    LocalFiles.writeParquet(graft.operators.Pipeline.chiSquareFromCells(store),
+      s"$statsPath/batch_id=$batchId")
     state.commit(batchId, store)
   }
 
@@ -311,7 +313,7 @@ object StreamAggState {
     // per-batch-dir pair output BEFORE the state epochs: a crash
     // anywhere in between replays the whole trigger, which rewrites
     // every one of the three destinations idempotently
-    pairs.write.mode("overwrite").parquet(s"$pairsPath/batch_id=$batchId")
+    LocalFiles.writeParquet(pairs, s"$pairsPath/batch_id=$batchId")
     bands.commit(batchId, priorBands.map(_.unionByName(newBands)).getOrElse(newBands))
     docs.commit(batchId, priorDocs.map(_.unionByName(newSets)).getOrElse(newSets))
   }
@@ -403,7 +405,7 @@ object StreamAggState {
           .filter(col("op").isNotNull) // untouched keys emit nothing
           .drop("__prior_nv")
     }
-    cdc.write.mode("overwrite").parquet(s"$cdcPath/epoch=$batchId")
+    LocalFiles.writeParquet(cdc, s"$cdcPath/epoch=$batchId")
     state.commit(batchId, merged)
   }
 
@@ -518,7 +520,7 @@ object StreamAggState {
       case None =>
         batch.withColumn("n_prior", lit(0L)).withColumn("flag", lit(false))
     }
-    judged.write.mode("overwrite").parquet(s"$outPath/epoch=$batchId")
+    LocalFiles.writeParquet(judged, s"$outPath/epoch=$batchId")
     state.commit(batchId, graft.operators.Pipeline
       .refreshAggState(prior, enriched, keyCols, Seq("__v", "__vv"),
         materialize = false))
@@ -666,7 +668,7 @@ object StreamAggState {
     val spark = batch.sparkSession
     val name = s"batch_$batchId"
     if (!graft.sources.Layout.consumedBatches(spark, root).contains(name)) {
-      batch.write.mode("overwrite").parquet(s"$root/delta/$name")
+      LocalFiles.writeParquet(batch, s"$root/delta/$name")
     }
     graft.sources.Layout.maintainClusteredBatches(spark, root, cols,
       numFiles, minDeltaBatches)
@@ -732,7 +734,7 @@ object StreamAggState {
       .localCheckpoint() // consumed by refine AND the within epoch
     val graph = Similarity.refineKnnGraph(allV, w, g, rounds, bridges)
     // graph BEFORE the state epochs (the established replay ordering)
-    graph.write.mode("overwrite").parquet(s"$graphPath/batch_id=$batchId")
+    LocalFiles.writeParquet(graph, s"$graphPath/batch_id=$batchId")
     vectors.commit(batchId, allV)
     within.commit(batchId, w)
   }
@@ -773,8 +775,8 @@ object StreamAggState {
     val prior = state.before(batchId)
     val store = prior.map(_.unionByName(batchTf)).getOrElse(batchTf)
       .localCheckpoint() // consumed by scoring AND the epoch write
-    TextAnalysis.bm25TopDocsFromTf(store, queryTerms, k, k1, b)
-      .write.mode("overwrite").parquet(s"$scoresPath/batch_id=$batchId")
+    LocalFiles.writeParquet(TextAnalysis.bm25TopDocsFromTf(store, queryTerms, k, k1, b),
+      s"$scoresPath/batch_id=$batchId")
     state.commit(batchId, store)
   }
 }

@@ -10,6 +10,7 @@ import org.apache.spark.sql.graftshim.ExecutionBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.core.{ErrorClassifier, ErrorFrame, model}
+import graft.sources.LocalFiles
 
 /** Structured Streaming parity of the reference's Kafka Streams surface:
   * the same capture projection (TryCapture) applied to an unbounded
@@ -38,13 +39,17 @@ object StreamErrorHandling {
     ErrorFrame.captureErrors(stream, results, input)
 
   /** The one trigger runner: start `df` as a checkpointed query that
-    * hands each micro-batch and its id to `f` (foreachBatch, append). */
+    * hands each micro-batch and its id to `f` (foreachBatch, append).
+    * Its checkpoint logs go through graft's local checkpoint manager
+    * unless the session names one ([[LocalFiles.installCheckpointManager]]). */
   private[streaming] def eachTrigger(df: DataFrame, checkpointPath: String)(
-      f: (DataFrame, Long) => Unit): StreamingQuery =
+      f: (DataFrame, Long) => Unit): StreamingQuery = {
+    LocalFiles.installCheckpointManager(df.sparkSession)
     df.writeStream
       .option("checkpointLocation", checkpointPath)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) => f(batch.toDF(), batchId) }
       .start()
+  }
 
   /** Where [[writeSinks]] runs a trigger's writes; its threads only
     * wait on Spark jobs, so it grows with the writes in flight. */
@@ -53,24 +58,27 @@ object StreamErrorHandling {
   /** Overwrite each `(frame, dir)` with the frame as parquet, all at once
     * as concurrent Spark jobs, and return when every write has ended;
     * the first failure in argument order is rethrown, the others ride
-    * along as suppressed. The frames read one pinned frame: a persisted
-    * partition's block lock lets whichever job reaches it first compute
-    * it while the other waits and reads the block, so the capture and
-    * its `observe` telemetry run once. The waiting task holds a core,
-    * yet with as many or twice as many partitions as cores the overlap
-    * still measured faster than writing in series (BASELINE.md), so the
+    * along as suppressed. Each frame is built on its write's own
+    * thread, so building and planning one overlaps the other's job.
+    * The frames read one pinned frame: a persisted partition's block
+    * lock lets whichever job reaches it first compute it while the
+    * other waits and reads the block, so the capture and its `observe`
+    * telemetry run once. The waiting task holds a core, yet with as
+    * many or twice as many partitions as cores the overlap still
+    * measured faster than writing in series (BASELINE.md), so the
     * writes always run together. Each write's thread carries the
-    * trigger thread's session and local properties, so the query's job
-    * group reaches its jobs and `stop()` cancels them; a trigger
-    * interrupted while it waits cancels its writes until all have ended.
+    * trigger thread's session (`spark`) and local properties, so the
+    * query's job group reaches its jobs and `stop()` cancels them; a
+    * trigger interrupted while it waits cancels its writes until all
+    * have ended.
     */
-  private[streaming] def writeSinks(sinks: (DataFrame, String)*): Unit = {
-    val spark = sinks.head._1.sparkSession
+  private[streaming] def writeSinks(spark: SparkSession)(
+      sinks: (() => DataFrame, String)*): Unit = {
     val tag = s"graft-sinks-${java.util.UUID.randomUUID()}"
-    val writes = sinks.map { case (df, dir) =>
+    val writes = sinks.map { case (frame, dir) =>
       ExecutionBridge.withThreadLocalCaptured(spark, sinkPool) {
         spark.sparkContext.addJobTag(tag)
-        df.write.mode("overwrite").parquet(dir)
+        LocalFiles.writeParquet(frame(), dir)
       }
     }
     val all = CompletableFuture.allOf(writes: _*)
@@ -185,9 +193,9 @@ object StreamErrorHandling {
         // exactly-once: each micro-batch owns a batch_id=N partition dir
         // and overwrites it — replaying the batch after a crash is
         // idempotent, readers see base-path partition discovery.
-        writeSinks(
-          ef.values -> s"$valuesPath/batch_id=$batchId",
-          ef.deadLetters(description) -> s"$dlqPath/batch_id=$batchId")
+        writeSinks(cached.sparkSession)(
+          (() => ef.values) -> s"$valuesPath/batch_id=$batchId",
+          (() => ef.deadLetters(description)) -> s"$dlqPath/batch_id=$batchId")
       } finally { cached.unpersist(); () }
       ()
     }
@@ -227,11 +235,11 @@ object StreamErrorHandling {
         try {
           val kept = graft.sources.Sinks.rateLimitDeadLetters(dl,
             Seq("__class"), Seq(graft.operators.TopK.asc("input_value")), maxPerClass)
-          writeSinks(
-            ef.values -> s"$valuesPath/batch_id=$batchId",
-            kept.drop("__class") -> s"$dlqPath/batch_id=$batchId",
-            graft.sources.Sinks.rateLimitAccounting(dl, kept, Seq("__class"))
-              .withColumnRenamed("__class", "error_class") ->
+          writeSinks(cached.sparkSession)(
+            (() => ef.values) -> s"$valuesPath/batch_id=$batchId",
+            (() => kept.drop("__class")) -> s"$dlqPath/batch_id=$batchId",
+            (() => graft.sources.Sinks.rateLimitAccounting(dl, kept, Seq("__class"))
+              .withColumnRenamed("__class", "error_class")) ->
               s"$accountingPath/batch_id=$batchId")
         } finally { dl.unpersist(); () }
       } finally { cached.unpersist(); () }
@@ -344,10 +352,10 @@ object StreamErrorHandling {
         .filterRecoverable(classifier, failOnRecoverable = false)
       val rec = split.recoverable
       val exhausted = rec.filter(col(RetryCountCol) + 1 > maxRetries)
-      writeSinks(
-        split.values.drop(RetryCountCol) -> s"$valuesPath/batch_id=$batchId",
-        deadLetterize(split.deadLettered, description)
-          .union(deadLetterize(exhausted, s"$description (retries exhausted)")) ->
+      writeSinks(spark)(
+        (() => split.values.drop(RetryCountCol)) -> s"$valuesPath/batch_id=$batchId",
+        (() => deadLetterize(split.deadLettered, description)
+          .union(deadLetterize(exhausted, s"$description (retries exhausted)"))) ->
           s"$dlqPath/batch_id=$batchId")
       val retryable = rec.filter(col(RetryCountCol) + 1 <= maxRetries)
         .drop("error_class", "error_message", "stack_trace")
@@ -426,14 +434,14 @@ object StreamErrorHandling {
     val dimCols = dim.columns.filterNot(c => keys.contains(c) || c == "__hit")
     val missed = joined.filter(col("__hit").isNull)
       .withColumn("__attempts", col("__attempts") + 1)
-    writeSinks(
+    writeSinks(spark)(
       // matched: enriched rows out, bookkeeping stripped
-      joined.filter(col("__hit"))
-        .drop("__hit").withColumnRenamed("__attempts", "attempts") ->
+      (() => joined.filter(col("__hit"))
+        .drop("__hit").withColumnRenamed("__attempts", "attempts")) ->
         s"$valuesPath/batch_id=$batchId",
       // exhausted: give up loudly — null-enriched, attempts visible
-      missed.filter(col("__attempts") >= maxAttempts)
-        .drop("__hit").withColumnRenamed("__attempts", "attempts") ->
+      (() => missed.filter(col("__attempts") >= maxAttempts)
+        .drop("__hit").withColumnRenamed("__attempts", "attempts")) ->
         s"$valuesPath/batch_id=${batchId}_exhausted")
     // still pending: original shape + attempt count, epoch-keyed
     store.commit(batchId, missed.filter(col("__attempts") < maxAttempts)
@@ -472,14 +480,14 @@ object StreamErrorHandling {
       .map(_.select(max(col("wm_ms"))).head.getLong(0))
       .getOrElse(Long.MinValue)
     val stamped = batch.withColumn("__ms", tsMs).localCheckpoint()
-    writeSinks(
-      stamped.filter(col("__ms") >= priorWm).drop("__ms") ->
+    writeSinks(spark)(
+      (() => stamped.filter(col("__ms") >= priorWm).drop("__ms")) ->
         s"$valuesPath/batch_id=$batchId",
       // a NULL event time cannot be judged — it goes to quarantine with
       // null lateness rather than silently vanishing from both sinks
-      stamped.filter(col("__ms") < priorWm || col("__ms").isNull)
+      (() => stamped.filter(col("__ms") < priorWm || col("__ms").isNull)
         .withColumn("lateness_ms", lit(priorWm) - col("__ms"))
-        .drop("__ms") -> s"$latePath/batch_id=$batchId")
+        .drop("__ms")) -> s"$latePath/batch_id=$batchId")
     val batchMax = stamped.select(max(col("__ms"))).head
     val newWm = math.max(priorWm,
       if (batchMax.isNullAt(0)) Long.MinValue
@@ -535,7 +543,7 @@ object StreamErrorHandling {
     }
     // pin: survivors feed both the values sink and the filter build
     val kept = fresh.localCheckpoint()
-    kept.write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
+    LocalFiles.writeParquet(kept, s"$valuesPath/batch_id=$batchId")
     // stat.bloomFilter NPEs on an EMPTY frame (null aggregate buffer) —
     // an all-duplicates trigger must still write its (unchanged) state
     val bfNew =
@@ -658,9 +666,9 @@ object StreamErrorHandling {
       .select(col("window.start").cast("string").as("window_start"),
         col(keyCol), col("n"))
     eachTrigger(counts, checkpointPath) { (batch, batchId) =>
-      graft.operators.TopK.perKey(batch, Seq("window_start"),
-          Seq(graft.operators.TopK.desc("n"), graft.operators.TopK.asc(keyCol)), k)
-        .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+      LocalFiles.writeParquet(graft.operators.TopK.perKey(batch, Seq("window_start"),
+          Seq(graft.operators.TopK.desc("n"), graft.operators.TopK.asc(keyCol)), k),
+        s"$outPath/batch_id=$batchId")
     }
   }
 
@@ -685,11 +693,11 @@ object StreamErrorHandling {
       val flagged = graft.operators.Pipeline.expectations(batch, rules).persist()
       try {
         val okCols = rules.map { case (n, _) => s"ok_$n" } :+ "quarantined"
-        writeSinks(
-          flagged.filter(!col("quarantined")).drop(okCols: _*) ->
+        writeSinks(batch.sparkSession)(
+          (() => flagged.filter(!col("quarantined")).drop(okCols: _*)) ->
             s"$valuesPath/batch_id=$batchId",
-          graft.operators.Pipeline.quarantineToDeadLetters(
-            flagged.drop(okCols: _*), rules, input, description) ->
+          (() => graft.operators.Pipeline.quarantineToDeadLetters(
+            flagged.drop(okCols: _*), rules, input, description)) ->
             s"$dlqPath/batch_id=$batchId")
       } finally { flagged.unpersist(); () }
     }
@@ -712,10 +720,10 @@ object StreamErrorHandling {
     val verdict = graft.operators.Pipeline
       .contaminationAgainstGrams(batch, evalGrams, n, textCol, idCol)
       .persist()
-    try writeSinks(
-      batch.join(verdict.withColumnRenamed("doc_id", idCol), idCol) ->
+    try writeSinks(batch.sparkSession)(
+      (() => batch.join(verdict.withColumnRenamed("doc_id", idCol), idCol)) ->
         s"$flaggedPath/batch_id=$batchId",
-      batch.join(verdict.select(col("doc_id").as(idCol)), Seq(idCol), "left_anti") ->
+      (() => batch.join(verdict.select(col("doc_id").as(idCol)), Seq(idCol), "left_anti")) ->
         s"$cleanPath/batch_id=$batchId")
     finally { verdict.unpersist(); () }
     ()
@@ -736,10 +744,10 @@ object StreamErrorHandling {
       .dsirRowScore(col(textCol), modelNanos, hexChars)
     val scored = batch.withColumn("n_tokens", nTok)
       .withColumn("log_weight", lw).localCheckpoint()
-    writeSinks(
-      scored.filter(col("log_weight") >= lit(minLogWeight)) ->
+    writeSinks(batch.sparkSession)(
+      (() => scored.filter(col("log_weight") >= lit(minLogWeight))) ->
         s"$keptPath/batch_id=$batchId",
-      scored.filter(col("log_weight") < lit(minLogWeight) || col("log_weight").isNull) ->
+      (() => scored.filter(col("log_weight") < lit(minLogWeight) || col("log_weight").isNull)) ->
         s"$rejectedPath/batch_id=$batchId")
   }
 
@@ -774,10 +782,10 @@ object StreamErrorHandling {
     val scored = batch.withColumn("quality_score",
       graft.operators.TextAnalysis.qualityScore(col(textCol), model))
       .localCheckpoint()
-    writeSinks(
-      scored.filter(col("quality_score") >= lit(minScore)) ->
+    writeSinks(batch.sparkSession)(
+      (() => scored.filter(col("quality_score") >= lit(minScore))) ->
         s"$keptPath/batch_id=$batchId",
-      scored.filter(col("quality_score") < lit(minScore) || col("quality_score").isNull) ->
+      (() => scored.filter(col("quality_score") < lit(minScore) || col("quality_score").isNull)) ->
         s"$rejectedPath/batch_id=$batchId")
   }
 
@@ -793,9 +801,9 @@ object StreamErrorHandling {
       graft.operators.TextAnalysis.gopherKeepRow(col(textCol), minWords,
         maxWords, stopwords))
       .localCheckpoint()
-    writeSinks(
-      flagged.filter(col("gopher_keep")) -> s"$keptPath/batch_id=$batchId",
-      flagged.filter(!col("gopher_keep")) -> s"$rejectedPath/batch_id=$batchId")
+    writeSinks(batch.sparkSession)(
+      (() => flagged.filter(col("gopher_keep"))) -> s"$keptPath/batch_id=$batchId",
+      (() => flagged.filter(!col("gopher_keep"))) -> s"$rejectedPath/batch_id=$batchId")
   }
 
   /** Streaming Gopher-rule quality gate (ST38): t38's live face — the
@@ -879,8 +887,8 @@ object StreamErrorHandling {
   private[graft] def processEnrichTrigger(batch: DataFrame, batchId: Long,
       dimPath: String, keys: Seq[String], valuesPath: String): Unit = {
     val dim = batch.sparkSession.read.parquet(dimPath)
-    batch.join(broadcast(dim), keys, "left_outer")
-      .write.mode("overwrite").parquet(s"$valuesPath/batch_id=$batchId")
+    LocalFiles.writeParquet(batch.join(broadcast(dim), keys, "left_outer"),
+      s"$valuesPath/batch_id=$batchId")
   }
 
   /** State for [[funnelDetect]]: the running min signup time plus the

@@ -35,6 +35,24 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(r.getAs[String]("fenced") == "a b c a")
   }
 
+  test("vector_dot_long is callable from SQL and equals VectorDotLong through the Column API") {
+    Graft.register(spark)
+    val df = Seq[(Array[Int], Array[Int])](
+      (Array(1, -2, 3), Array(4, 5, -6)),
+      (Array(127, 127), Array(127, -127, 9)),
+      (Array(-128, 100, 7), Array(-128, 100, 7)),
+      (Array(1), null)).toDF("a", "b")
+    df.createOrReplaceTempView("dot_long_input")
+    val viaSql = spark.sql("SELECT vector_dot_long(a, b) AS d FROM dot_long_input")
+      .as[Option[Long]].collect().toSeq
+    val viaApi = df.select(graft.functions.VectorDotLong($"a", $"b").as("d"))
+      .as[Option[Long]].collect().toSeq
+    assert(spark.sql("SELECT vector_dot_long(a, b) FROM dot_long_input").schema.head.dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(viaSql == viaApi)
+    assert(viaSql == Seq(Some(-24L), Some(0L), Some(16384L + 10000L + 49L), None))
+  }
+
   test("simhash_sig tolerates null array elements from SQL callers") {
     Graft.register(spark)
     val r = spark.sql(

@@ -51,15 +51,15 @@ class ConcurrentSinksSpec extends SparkSpec {
     // the first would time out
     ConcurrentSinksSpec.barrier = new CyclicBarrier(2)
     val meet = udf { (x: Long) => ConcurrentSinksSpec.barrier.await(30, TimeUnit.SECONDS); x }
-    StreamErrorHandling.writeSinks(
-      spark.range(0, 1, 1, 1).select(meet($"id").as("id")) -> s"$tmp/a",
-      spark.range(1, 2, 1, 1).select(meet($"id").as("id")) -> s"$tmp/b")
+    StreamErrorHandling.writeSinks(spark)(
+      (() => spark.range(0, 1, 1, 1).select(meet($"id").as("id"))) -> s"$tmp/a",
+      (() => spark.range(1, 2, 1, 1).select(meet($"id").as("id"))) -> s"$tmp/b")
     assert(rowsAt(s"$tmp/a") == 1 && rowsAt(s"$tmp/b") == 1)
     // a failed write is rethrown once the other write has ended
     val failure = intercept[Exception] {
-      StreamErrorHandling.writeSinks(
-        spark.range(0, 3, 1, 1).select(expr("id div 0").as("q")) -> s"$tmp/c",
-        spark.range(0, 5, 1, 1).toDF() -> s"$tmp/d")
+      StreamErrorHandling.writeSinks(spark)(
+        (() => spark.range(0, 3, 1, 1).select(expr("id div 0").as("q"))) -> s"$tmp/c",
+        (() => spark.range(0, 5, 1, 1).toDF()) -> s"$tmp/d")
     }
     assert(Iterator.iterate[Throwable](failure)(_.getCause).takeWhile(_ != null)
       .exists(_.getMessage.contains("DIVIDE_BY_ZERO")), failure.toString)
