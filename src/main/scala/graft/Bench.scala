@@ -87,11 +87,20 @@ object Bench {
   private def dec(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.6f", Double.box(v))
 
-  /** The artifact's one line: every query's seconds and their total. */
-  def jsonLine(m: Seq[(String, Double)], sfDir: String, cpus: String): String = {
+  /** The artifact's one line: every query's seconds and their total,
+    * and, when given, each query's timed samples (`samples`, of which
+    * its seconds are the minimum), so their spread shows.
+    */
+  def jsonLine(m: Seq[(String, Double)], sfDir: String, cpus: String,
+      samples: Map[String, Seq[Double]] = Map.empty): String = {
     val qs = m.map { case (k, v) => "\"" + k + "\":" + dec(v) }
       .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${dec(m.map(_._2).sum)},"unit":"sec","queries":$qs,"sf":"$sfDir","cpus":$cpus}"""
+    val spread =
+      if (samples.isEmpty) ""
+      else samples.toSeq.sortBy(_._1)
+        .map { case (k, ts) => "\"" + k + "\":" + ts.map(dec).mkString("[", ",", "]") }
+        .mkString(",\"samples\":{", ",", "}")
+    s"""{"metric":"total","value":${dec(m.map(_._2).sum)},"unit":"sec","queries":$qs$spread,"sf":"$sfDir","cpus":$cpus}"""
   }
 
   /** The last stdout line: the total of [[jsonLine]], the query count
@@ -197,7 +206,7 @@ object Bench {
     // best-of-2 per query: the host CPU is time-shared, so single-shot
     // timings mix scheduler noise into the measurement; the min is the
     // steady-state cost of the plan.
-    val results = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val timed = selected.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       System.gc() // settle heap between queries: measure the plan, not
                   // the previous query's garbage
       var failed = false
@@ -215,8 +224,9 @@ object Bench {
       // would otherwise register as uniformly FASTER — sailing under
       // the one-sided contention gate and wiping the drift baseline
       // with fail-times (review finding, round 10)
-      if (failed) None else Some(name -> times.min)
+      if (failed) None else Some(name -> times)
     }
+    val results = timed.map { case (name, times) => name -> times.min }
     // A run at any SF or core count other than the committed baseline's
     // is FOREIGN — judged from the run itself (env vs defaults), not
     // from whatever prior file happened to load: a missing/unreadable
@@ -277,8 +287,12 @@ object Bench {
     // default repo-relative path (outPath chosen above, before the
     // prior was read, so the merge prior and the overwrite target
     // agree).
+    // both samples of each query this run measured and the artifact
+    // keeps, beside their minimum
+    val kept = merged.toMap
+    val samples = timed.toMap.filter { case (name, times) => kept.get(name).contains(times.min) }
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), jsonLine(merged, sfDir, cpus) + "\n")
+      java.nio.file.Paths.get(outPath), jsonLine(merged, sfDir, cpus, samples) + "\n")
     catch { case t: Throwable => System.err.println(s"[bench] write $outPath failed: $t") }
     // The printed line is the RAW run, not the merge (VERDICT r14 task
     // 2): the tail gate protects the committed artifact from contended
@@ -286,7 +300,7 @@ object Bench {
     // rewritten to a historical value — a genuine >2x regression has to
     // be visible in stdout. The compact line follows it, so a stdout
     // tail of 2000 chars still parses the total.
-    println(jsonLine(results, sfDir, cpus))
+    println(jsonLine(results, sfDir, cpus, timed.toMap))
     println(compactLine(results, sfDir, cpus, outPath))
     spark.stop()
   }

@@ -121,8 +121,11 @@ final case class ErrorFrame private (
     successes(if (df.isStreaming || df.storageLevel != StorageLevel.NONE) df else teed)
 
   private def successes(rows: DataFrame): DataFrame =
-    rows.filter(!anyError).select(
-      kept ++ resultNames.map(n => col(capturedCol(n))(VALUE).as(n)): _*)
+    rows.filter(!anyError).select(valueColumns: _*)
+
+  /** The columns of a values row. */
+  private def valueColumns: Seq[Column] =
+    kept ++ resultNames.map(n => col(capturedCol(n))(VALUE).as(n))
 
   /** `df` under an [[ErrorTeePlan]] that leaves its error rows in this
     * frame's slot.
@@ -207,19 +210,39 @@ final case class ErrorFrame private (
       timestampCol: Option[Column] = None,
       withLineage: Boolean = false,
       lineageCols: Option[(Column, Column, Column)] = None): DataFrame = {
-    val (topicC, partC, offC) = lineageOf(withLineage, lineageCols)
+    val lineage = lineageOf(withLineage, lineageCols)
+    val (topicC, partC, offC) = lineage
     withFirstError(errorRows(Seq(inputCol, topicC, partC, offC) ++ timestampCol: _*)).select(
-      inputCol.cast("string").as("input_value"),
-      topicC.as("topic"),
-      partC.as("partition"),
-      offC.as("offset"),
-      lit(description).as("description"),
-      struct(
-        col("error_class"),
-        col("error_message").as("message"),
-        col("stack_trace")).as("cause"),
-      timestampCol.getOrElse(lit(null).cast("timestamp")).as("input_timestamp"))
+      deadLetterColumns(description, timestampCol, lineage,
+        Seq(col("error_class"), col("error_message").as("message"), col("stack_trace"))): _*)
   }
+
+  /** The columns of a dead letter, given the fields of its `cause`:
+    * its first error's `error_class`, `message` and `stack_trace`.
+    */
+  private def deadLetterColumns(description: String, timestampCol: Option[Column],
+      lineage: (Column, Column, Column), cause: Seq[Column]): Seq[Column] = Seq(
+    inputCol.cast("string").as("input_value"),
+    lineage._1.as("topic"),
+    lineage._2.as("partition"),
+    lineage._3.as("offset"),
+    lit(description).as("description"),
+    struct(cause: _*).as("cause"),
+    timestampCol.getOrElse(lit(null).cast("timestamp")).as("input_timestamp"))
+
+  /** Each row once, routed: a `values` struct column holding its
+    * [[values]] row when it captured no error, and a `dead_letters`
+    * struct column holding its [[deadLetters]] row (same `description`,
+    * default lineage, no timestamp) when it did; the other is null.
+    * Built from the same column definitions as those two, over `df`
+    * itself, so one pass over it feeds both sinks of a routed write.
+    */
+  def routed(description: String): DataFrame =
+    df.select(
+      when(!anyError, struct(valueColumns: _*)).as("values"),
+      when(anyError, struct(deadLetterColumns(description, None, lineageOf(false, None),
+        Seq(firstError(ERROR_CLASS).as("error_class"), firstError(ERROR_MESSAGE).as("message"),
+          firstError(STACK_TRACE).as("stack_trace"))): _*)).as("dead_letters"))
 
   /** Both branches in ONE frame: original columns, unwrapped result
     * columns (null on error rows), a boolean `is_error` flag and the

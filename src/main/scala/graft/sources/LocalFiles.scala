@@ -12,6 +12,7 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager,
   FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.graftshim.SinkWriter
 
 /** graft's local file I/O without a forked process per call.
   *
@@ -28,8 +29,9 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   *    `eachTrigger` installs as the session's
   *    `spark.sql.streaming.checkpointFileManagerClass` unless the user
   *    set one ([[installCheckpointManager]]);
-  *  - parquet sinks and epoch stores, through writer options
-  *    ([[writeParquet]], [[writerOptions]]) and [[fileSystem]].
+  *  - parquet sinks and epoch stores, through the Hadoop conf of
+  *    graft's sink writer ([[writeParquet]], [[writeRouted]]), writer
+  *    options ([[writerOptions]]) and [[fileSystem]].
   *
   * Paths of any other scheme, and sessions whose Hadoop conf already
   * names a `file:` filesystem, are left as they were.
@@ -74,9 +76,22 @@ object LocalFiles {
   def fileSystem(spark: SparkSession, path: Path): FileSystem =
     path.getFileSystem(routed(path, spark.sessionState.newHadoopConf()))
 
-  /** Overwrite `dir` with `df` as parquet. */
+  /** Overwrite `dir` with `df` as parquet, through graft's sink writer
+    * ([[SinkWriter]]), on [[LocalFileSystem]] when graft [[routes]] it.
+    */
   def writeParquet(df: DataFrame, dir: String): Unit =
-    df.write.options(writerOptions(df.sparkSession, dir)).mode("overwrite").parquet(dir)
+    SinkWriter.write(df, dir, routed(new Path(dir), df.sparkSession.sessionState.newHadoopConf()))
+
+  /** Overwrite `dirs(i)` with the non-null values of `rows`' struct
+    * column `i` as parquet, for every `i`, in one job
+    * ([[SinkWriter.writeRouted]]).
+    */
+  def writeRouted(rows: DataFrame, dirs: String*): Unit = {
+    val conf = dirs.foldLeft(rows.sparkSession.sessionState.newHadoopConf()) { (c, d) =>
+      routed(new Path(d), c)
+    }
+    SinkWriter.writeRouted(rows, dirs, conf)
+  }
 
   /** Make [[LocalCheckpointFileManager]] the session's checkpoint manager
     * unless one is set. It stays set: a file source builds its log from

@@ -23,10 +23,12 @@ import graft.sources.LocalFiles
   * the streaming checkpoint tracking batch ids; parquet sinks are
   * idempotent per batch directory overwrite by batchId partition.
   *
-  * The trigger contract: a trigger body that writes two or more sinks
-  * pins its frame once (persist or localCheckpoint), writes the sinks
-  * as concurrent jobs over it ([[writeSinks]]), and only then commits
-  * its state epochs, one after another.
+  * The trigger contract: a trigger body whose sinks are row-wise
+  * projections of its batch writes them in one job over routed rows
+  * ([[writeRouted]]), with no pin; any other body that writes two or
+  * more sinks pins its frame once (persist or localCheckpoint) and
+  * writes the sinks as concurrent jobs over it ([[writeSinks]]). Either
+  * way it commits its state epochs only then, one after another.
   */
 object StreamErrorHandling {
 
@@ -73,12 +75,27 @@ object StreamErrorHandling {
     * have ended.
     */
   private[streaming] def writeSinks(spark: SparkSession)(
-      sinks: (() => DataFrame, String)*): Unit = {
+      sinks: (() => DataFrame, String)*): Unit =
+    runWrites(spark)(sinks.map { case (frame, dir) => () => LocalFiles.writeParquet(frame(), dir) })
+
+  /** Overwrite `dirs(i)` with the non-null values of `rows`' struct
+    * column `i`, for every `i`, as one job ([[LocalFiles.writeRouted]]).
+    * It runs like one of [[writeSinks]]' writes, so `stop()` cancels it
+    * and the trigger returns only once it has ended.
+    */
+  private[streaming] def writeRouted(rows: DataFrame, dirs: String*): Unit =
+    runWrites(rows.sparkSession)(Seq(() => LocalFiles.writeRouted(rows, dirs: _*)))
+
+  /** Runs each write on its own [[sinkPool]] thread, which carries the
+    * calling thread's session and local properties and tags its jobs,
+    * and returns when all have ended ([[writeSinks]]).
+    */
+  private def runWrites(spark: SparkSession)(bodies: Seq[() => Unit]): Unit = {
     val tag = s"graft-sinks-${java.util.UUID.randomUUID()}"
-    val writes = sinks.map { case (frame, dir) =>
+    val writes = bodies.map { body =>
       ExecutionBridge.withThreadLocalCaptured(spark, sinkPool) {
         spark.sparkContext.addJobTag(tag)
-        LocalFiles.writeParquet(frame(), dir)
+        body()
       }
     }
     val all = CompletableFuture.allOf(writes: _*)
@@ -184,20 +201,13 @@ object StreamErrorHandling {
       checkpointPath: String): StreamingQuery = {
     val captured = capture(stream, results, input).observedNamed(TelemetryName)
     eachTrigger(captured.df, checkpointPath) { (batch, batchId) =>
-      // persist: the two sink writes below would otherwise each re-run
-      // the whole micro-batch plan — paying the capture scan twice AND
-      // double-counting the observe telemetry accumulators
-      val cached = batch.persist()
-      try {
-        val ef = ErrorFrame(cached, captured.resultNames, input)
-        // exactly-once: each micro-batch owns a batch_id=N partition dir
-        // and overwrites it — replaying the batch after a crash is
-        // idempotent, readers see base-path partition discovery.
-        writeSinks(cached.sparkSession)(
-          (() => ef.values) -> s"$valuesPath/batch_id=$batchId",
-          (() => ef.deadLetters(description)) -> s"$dlqPath/batch_id=$batchId")
-      } finally { cached.unpersist(); () }
-      ()
+      // one job over the routed rows: each row is captured and counted
+      // once, with no pin. exactly-once: each micro-batch owns a
+      // batch_id=N partition dir and overwrites it — replaying the batch
+      // after a crash is idempotent, readers see base-path partition
+      // discovery.
+      writeRouted(ErrorFrame(batch, captured.resultNames, input).routed(description),
+        s"$valuesPath/batch_id=$batchId", s"$dlqPath/batch_id=$batchId")
     }
   }
 

@@ -122,6 +122,18 @@ class BenchMergeSpec extends AnyFunSuite {
     assert(Bench.parsePrior(full, Bench.defaultSfDir, "4")._1 === run.toMap)
   }
 
+  test("the artifact records each query's best-of-2 samples beside their minimum, and parses to the minima") {
+    val samples = Map("q001" -> Seq(0.5, 0.25), "q002" -> Seq(2.0, 3.5))
+    val run = samples.toSeq.sortBy(_._1).map { case (k, ts) => k -> ts.min }
+    val artifact = Bench.jsonLine(run, Bench.defaultSfDir, "4", samples)
+    assert(artifact.contains(""""samples":{"q001":[0.500000,0.250000],"q002":[2.000000,3.500000]}"""),
+      artifact)
+    assert(Bench.parsePrior(artifact, Bench.defaultSfDir, "4") === (run.toMap, Nil))
+    // the full line without samples is unchanged
+    assert(Bench.jsonLine(run, Bench.defaultSfDir, "4") === """{"metric":"total","value":2.250000,""" +
+      """"unit":"sec","queries":{"q001":0.250000,"q002":2.000000},"sf":"/root/testdata/sf0.1","cpus":4}""")
+  }
+
   // --- artifact path + prior guards (VERDICT r14 task 2: the driver's
   // 8-core scaling run merged into the 32-core bench_out.json, wiping
   // the full 32-core per-query record; cross-CPU must divert exactly

@@ -15,10 +15,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import graft.SparkSpec
 
 /** A trigger writes its sinks as concurrent jobs over one pinned
-  * capture ([[StreamErrorHandling.writeSinks]]): the writes overlap,
-  * the capture and its telemetry still run once per row, a failed
-  * write fails the trigger and its replay rewrites every sink, and
-  * `stop()` leaves no sink job behind.
+  * capture ([[StreamErrorHandling.writeSinks]]), or as one job over
+  * routed rows (`captureToDlq`): the writes overlap, the capture and
+  * its telemetry run once per row, a failed write fails the trigger and
+  * its replay rewrites every sink, and `stop()` leaves no sink job
+  * behind.
   */
 class ConcurrentSinksSpec extends SparkSpec {
   import spark.implicits._
@@ -97,6 +98,34 @@ class ConcurrentSinksSpec extends SparkSpec {
     FileUtils.deleteDirectory(tmp.toFile)
   }
 
+  test("a captureToDlq trigger runs exactly one job") {
+    val tmp = Files.createTempDirectory("graft-sink-one-job")
+    drop(tmp, "warm", Seq("0"))
+    val q = captureToDlq(tmp)
+    q.processAllAvailable()
+    val group = q.runId.toString
+    val jobs = new ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_ == group).foreach(g => jobs.put(e.jobId, g))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      (1 to 3).foreach { i =>
+        drop(tmp, s"t$i", Seq("1", "x", "3"), Seq("y", "5"))
+        q.processAllAvailable()
+      }
+      ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    q.stop()
+    assert(jobs.size == 3, s"jobs of three triggers: ${jobs.keySet}")
+    (1 to 3).foreach { i =>
+      assert(rowsAt(s"$tmp/values/batch_id=$i") == 3 && rowsAt(s"$tmp/dlq/batch_id=$i") == 2)
+    }
+    FileUtils.deleteDirectory(tmp.toFile)
+  }
+
   test("a failed sink write fails the trigger, and its replay rewrites both sinks") {
     val tmp = Files.createTempDirectory("graft-sink-replay")
     val (dlq, parked) = (tmp.resolve("dlq"), tmp.resolve("dlq-parked"))
@@ -109,8 +138,9 @@ class ConcurrentSinksSpec extends SparkSpec {
     drop(tmp, "t1", Seq("4", "y", "6", "z"))
     intercept[Exception](q0.processAllAvailable())
     q0.stop()
-    // the values write ran to its end beside the failed one
-    assert(new java.io.File(s"$tmp/values/batch_id=1/_SUCCESS").exists)
+    // one job writes both sinks, and every sink dir is made before it
+    // starts: the failed trigger committed neither sink
+    assert(!new java.io.File(s"$tmp/values/batch_id=1/_SUCCESS").exists)
     Files.delete(dlq)
     Files.move(parked, dlq)
     val q1 = captureToDlq(tmp)
