@@ -54,7 +54,8 @@ final case class ErrorFrame private (
   /** Where values executions leave this frame's error rows. */
   private lazy val errorSlot = new ErrorRowsSlot
 
-  private def anyError: Column =
+  /** Whether a row captured an error; never null. */
+  private[graft] def anyError: Column =
     resultNames.map(n => col(capturedCol(n))(ERROR_CLASS).isNotNull).reduce(_ || _)
 
   private def firstError(field: String): Column =
@@ -111,8 +112,7 @@ final case class ErrorFrame private (
         Some((input_file_name().cast("string"), spark_partition_id(),
           monotonically_increasing_id()))
       else sourceLineage
-    }.getOrElse(
-      (lit(null).cast("string"), lit(null).cast("int"), lit(null).cast("bigint")))
+    }.getOrElse(NoLineage)
 
   /** Successfully processed rows: original columns minus capture internals,
     * plus the unwrapped result columns (ProcessedKeyValue::getValues).
@@ -124,7 +124,7 @@ final case class ErrorFrame private (
     rows.filter(!anyError).select(valueColumns: _*)
 
   /** The columns of a values row. */
-  private def valueColumns: Seq[Column] =
+  private[graft] def valueColumns: Seq[Column] =
     kept ++ resultNames.map(n => col(capturedCol(n))(VALUE).as(n))
 
   /** `df` under an [[ErrorTeePlan]] that leaves its error rows in this
@@ -213,36 +213,17 @@ final case class ErrorFrame private (
     val lineage = lineageOf(withLineage, lineageCols)
     val (topicC, partC, offC) = lineage
     withFirstError(errorRows(Seq(inputCol, topicC, partC, offC) ++ timestampCol: _*)).select(
-      deadLetterColumns(description, timestampCol, lineage,
-        Seq(col("error_class"), col("error_message").as("message"), col("stack_trace"))): _*)
+      deadLetterShape(inputCol, description, Seq(col("error_class"),
+        col("error_message").as("message"), col("stack_trace")), lineage, timestampCol): _*)
   }
 
-  /** The columns of a dead letter, given the fields of its `cause`:
-    * its first error's `error_class`, `message` and `stack_trace`.
+  /** A row's [[deadLetters]] columns (default lineage, no timestamp),
+    * read off its capture struct, for a split that routes each row once.
     */
-  private def deadLetterColumns(description: String, timestampCol: Option[Column],
-      lineage: (Column, Column, Column), cause: Seq[Column]): Seq[Column] = Seq(
-    inputCol.cast("string").as("input_value"),
-    lineage._1.as("topic"),
-    lineage._2.as("partition"),
-    lineage._3.as("offset"),
-    lit(description).as("description"),
-    struct(cause: _*).as("cause"),
-    timestampCol.getOrElse(lit(null).cast("timestamp")).as("input_timestamp"))
-
-  /** Each row once, routed: a `values` struct column holding its
-    * [[values]] row when it captured no error, and a `dead_letters`
-    * struct column holding its [[deadLetters]] row (same `description`,
-    * default lineage, no timestamp) when it did; the other is null.
-    * Built from the same column definitions as those two, over `df`
-    * itself, so one pass over it feeds both sinks of a routed write.
-    */
-  def routed(description: String): DataFrame =
-    df.select(
-      when(!anyError, struct(valueColumns: _*)).as("values"),
-      when(anyError, struct(deadLetterColumns(description, None, lineageOf(false, None),
-        Seq(firstError(ERROR_CLASS).as("error_class"), firstError(ERROR_MESSAGE).as("message"),
-          firstError(STACK_TRACE).as("stack_trace"))): _*)).as("dead_letters"))
+  private[graft] def deadLetterColumns(description: String): Seq[Column] =
+    deadLetterShape(inputCol, description, Seq(firstError(ERROR_CLASS).as("error_class"),
+      firstError(ERROR_MESSAGE).as("message"), firstError(STACK_TRACE).as("stack_trace")),
+      lineageOf(false, None))
 
   /** Both branches in ONE frame: original columns, unwrapped result
     * columns (null on error rows), a boolean `is_error` flag and the
@@ -391,6 +372,24 @@ object ErrorFrame {
   private val LOG_COL = CAPTURE_PREFIX + "log"
 
   def capturedCol(name: String): String = CAPTURE_PREFIX + name
+
+  /** Null topic, partition and offset. */
+  private[graft] def NoLineage: (Column, Column, Column) =
+    (lit(null).cast("string"), lit(null).cast("int"), lit(null).cast("bigint"))
+
+  /** A dead letter's columns in the reference shape (DeadLetter.avsc),
+    * `cause` being its error_class, message and stack_trace.
+    */
+  private[graft] def deadLetterShape(input: Column, description: String, cause: Seq[Column],
+      lineage: (Column, Column, Column) = NoLineage,
+      timestamp: Option[Column] = None): Seq[Column] = Seq(
+    input.cast("string").as("input_value"),
+    lineage._1.as("topic"),
+    lineage._2.as("partition"),
+    lineage._3.as("offset"),
+    lit(description).as("description"),
+    struct(cause: _*).as("cause"),
+    timestamp.getOrElse(lit(null).cast("timestamp")).as("input_timestamp"))
 
   /** Content-keyed lineage for DLQ stores that need a STABLE row
     * identity (VERDICT r10): the batch `withLineage` offsets come from

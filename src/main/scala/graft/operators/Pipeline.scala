@@ -1293,23 +1293,21 @@ object Pipeline {
     * "the code threw" and "the data broke its contract".
     */
   def quarantineToDeadLetters(df: DataFrame, rules: Seq[(String, Column)],
-      input: Column, description: String): DataFrame = {
-    val flagged = expectations(df, rules)
+      input: Column, description: String): DataFrame =
+    expectations(df, rules).filter(col("quarantined"))
+      .select(contractDeadLetterColumns(rules, input, description): _*)
+
+  /** The dead-letter columns of a row flagged by [[expectations]],
+    * read off its `ok_<name>` columns, so no rule runs again.
+    */
+  private[graft] def contractDeadLetterColumns(rules: Seq[(String, Column)],
+      input: Column, description: String): Seq[Column] = {
     // concat_ws skips nulls: only failed rules appear, in rule order
     val failed = concat_ws(",",
       rules.map { case (n, _) => when(!col(s"ok_$n"), lit(n)) }: _*)
-    flagged.filter(col("quarantined"))
-      .select(
-        input.cast("string").as("input_value"),
-        lit(null).cast("string").as("topic"),
-        lit(null).cast("int").as("partition"),
-        lit(null).cast("bigint").as("offset"),
-        lit(description).as("description"),
-        struct(
-          lit("graft.ContractViolation").as("error_class"),
-          failed.as("message"),
-          lit(null).cast("string").as("stack_trace")).as("cause"),
-        lit(null).cast("timestamp").as("input_timestamp"))
+    graft.core.ErrorFrame.deadLetterShape(input, description, Seq(
+      lit("graft.ContractViolation").as("error_class"), failed.as("message"),
+      lit(null).cast("string").as("stack_trace")))
   }
 
   /** Quality-aware canonical selection: when a near-dup cluster

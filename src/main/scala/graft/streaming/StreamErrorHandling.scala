@@ -4,7 +4,7 @@ import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionEx
 
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ExecutionBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -25,7 +25,7 @@ import graft.sources.LocalFiles
   *
   * The trigger contract: a trigger body whose sinks are row-wise
   * projections of its batch writes them in one job over routed rows
-  * ([[writeRouted]]), with no pin; any other body that writes two or
+  * ([[writeSplit]]), with no pin; any other body that writes two or
   * more sinks pins its frame once (persist or localCheckpoint) and
   * writes the sinks as concurrent jobs over it ([[writeSinks]]). Either
   * way it commits its state epochs only then, one after another.
@@ -78,13 +78,31 @@ object StreamErrorHandling {
       sinks: (() => DataFrame, String)*): Unit =
     runWrites(spark)(sinks.map { case (frame, dir) => () => LocalFiles.writeParquet(frame(), dir) })
 
-  /** Overwrite `dirs(i)` with the non-null values of `rows`' struct
-    * column `i`, for every `i`, as one job ([[LocalFiles.writeRouted]]).
-    * It runs like one of [[writeSinks]]' writes, so `stop()` cancels it
-    * and the trigger returns only once it has ended.
+  /** Overwrite `whenTrue`'s dir with its columns over the rows where
+    * `p` holds, and `otherwise`'s over the rest (`p` false or null), as
+    * one job that computes each row of `frame` once, with no pin
+    * ([[LocalFiles.writeRouted]]). It runs like a [[writeSinks]] write:
+    * `stop()` cancels it, and the trigger waits for it to end.
     */
-  private[streaming] def writeRouted(rows: DataFrame, dirs: String*): Unit =
-    runWrites(rows.sparkSession)(Seq(() => LocalFiles.writeRouted(rows, dirs: _*)))
+  private[streaming] def writeSplit(frame: DataFrame, p: Column)(
+      whenTrue: (Seq[Column], String), otherwise: (Seq[Column], String)): Unit = {
+    // folds away where `p` is never null (captureToDlq's)
+    val hit = coalesce(p, lit(false))
+    // a sink writes its struct's fields; the column names are not written
+    val rows = frame.select(
+      when(hit, struct(whenTrue._1: _*)).as("values"),
+      when(!hit, struct(otherwise._1: _*)).as("dead_letters"))
+    runWrites(frame.sparkSession)(
+      Seq(() => LocalFiles.writeRouted(rows, whenTrue._2, otherwise._2)))
+  }
+
+  /** A gate's [[writeSplit]]: all of `scored` to kept or rejected. */
+  private def writeGate(scored: DataFrame, keep: Column, batchId: Long,
+      keptPath: String, rejectedPath: String): Unit = {
+    val all = scored.columns.toSeq.map(col)
+    writeSplit(scored, keep)(
+      all -> s"$keptPath/batch_id=$batchId", all -> s"$rejectedPath/batch_id=$batchId")
+  }
 
   /** Runs each write on its own [[sinkPool]] thread, which carries the
     * calling thread's session and local properties and tags its jobs,
@@ -201,14 +219,22 @@ object StreamErrorHandling {
       checkpointPath: String): StreamingQuery = {
     val captured = capture(stream, results, input).observedNamed(TelemetryName)
     eachTrigger(captured.df, checkpointPath) { (batch, batchId) =>
-      // one job over the routed rows: each row is captured and counted
-      // once, with no pin. exactly-once: each micro-batch owns a
-      // batch_id=N partition dir and overwrites it — replaying the batch
-      // after a crash is idempotent, readers see base-path partition
-      // discovery.
-      writeRouted(ErrorFrame(batch, captured.resultNames, input).routed(description),
-        s"$valuesPath/batch_id=$batchId", s"$dlqPath/batch_id=$batchId")
+      processCaptureTrigger(batch, batchId, captured.resultNames, input,
+        description, valuesPath, dlqPath)
     }
+  }
+
+  /** One trigger of [[captureToDlq]]: each row is captured and counted
+    * once. Each micro-batch overwrites its own batch_id=N dirs, so a
+    * replay after a crash is idempotent.
+    */
+  private[graft] def processCaptureTrigger(batch: DataFrame, batchId: Long,
+      resultNames: Seq[String], input: Column, description: String,
+      valuesPath: String, dlqPath: String): Unit = {
+    val ef = ErrorFrame(batch, resultNames, input)
+    writeSplit(batch, !ef.anyError)(
+      ef.valueColumns -> s"$valuesPath/batch_id=$batchId",
+      ef.deadLetterColumns(description) -> s"$dlqPath/batch_id=$batchId")
   }
 
   /** [[captureToDlq]] with per-trigger DLQ rate limiting (error-storm
@@ -331,15 +357,8 @@ object StreamErrorHandling {
       now: Long): Unit = {
     val spark = batch.sparkSession
     def deadLetterize(errRows: DataFrame, desc: String): DataFrame =
-      errRows.select(
-        input.cast("string").as("input_value"),
-        lit(null).cast("string").as("topic"),
-        lit(null).cast("int").as("partition"),
-        lit(null).cast("bigint").as("offset"),
-        lit(desc).as("description"),
-        struct(col("error_class"), col("error_message").as("message"),
-          col("stack_trace")).as("cause"),
-        lit(null).cast("timestamp").as("input_timestamp"))
+      errRows.select(ErrorFrame.deadLetterShape(input, desc, Seq(col("error_class"),
+        col("error_message").as("message"), col("stack_trace"))): _*)
     // no localCheckpoint pin needed: this trigger writes epoch=batchId
     // and never touches the epoch it reads
     val pending = EpochStore(spark, pendingPath)
@@ -468,7 +487,8 @@ object StreamErrorHandling {
     * late) go to `latePath` with their lateness in ms; on-time rows go
     * to `valuesPath`; the watermark state advances to
     * max(prior, max(ts) − delay). Crash replay rewrites both batch
-    * dirs and recomputes against the prior epoch — idempotent.
+    * dirs and recomputes against the prior epoch — idempotent. One
+    * routed job splits the batch and observes its max event time.
     */
   def quarantineLate(stream: DataFrame, tsCol: String, delayMs: Long,
       valuesPath: String, latePath: String, statePath: String,
@@ -484,25 +504,24 @@ object StreamErrorHandling {
       batchId: Long, tsCol: String, delayMs: Long, valuesPath: String,
       latePath: String, statePath: String): Unit = {
     val spark = batch.sparkSession
+    import spark.implicits._
     val tsMs = expr(s"unix_micros(`$tsCol`) div 1000")
     val state = EpochStore(spark, statePath)
+    // one row: a scan reads it in one job, an aggregate in two
     val priorWm: Long = state.before(batchId)
-      .map(_.select(max(col("wm_ms"))).head.getLong(0))
+      .flatMap(_.select(col("wm_ms")).as[Long].collect().maxOption)
       .getOrElse(Long.MinValue)
-    val stamped = batch.withColumn("__ms", tsMs).localCheckpoint()
-    writeSinks(spark)(
-      (() => stamped.filter(col("__ms") >= priorWm).drop("__ms")) ->
-        s"$valuesPath/batch_id=$batchId",
+    // completed by the session's ObservationManager as the write ends
+    val seen = Observation()
+    val stamped = batch.withColumn("__ms", tsMs).observe(seen, max(col("__ms")).as("max_ms"))
+    val cols = batch.columns.toSeq.map(col)
+    writeSplit(stamped, col("__ms") >= priorWm)(
+      cols -> s"$valuesPath/batch_id=$batchId",
       // a NULL event time cannot be judged — it goes to quarantine with
       // null lateness rather than silently vanishing from both sinks
-      (() => stamped.filter(col("__ms") < priorWm || col("__ms").isNull)
-        .withColumn("lateness_ms", lit(priorWm) - col("__ms"))
-        .drop("__ms")) -> s"$latePath/batch_id=$batchId")
-    val batchMax = stamped.select(max(col("__ms"))).head
-    val newWm = math.max(priorWm,
-      if (batchMax.isNullAt(0)) Long.MinValue
-      else batchMax.getLong(0) - delayMs)
-    import spark.implicits._
+      (cols :+ (lit(priorWm) - col("__ms")).as("lateness_ms")) -> s"$latePath/batch_id=$batchId")
+    val newWm = Option(seen.get("max_ms").asInstanceOf[java.lang.Long])
+      .fold(priorWm)(ms => math.max(priorWm, ms - delayMs))
     state.commit(batchId, Seq(newWm).toDF("wm_ms").coalesce(1))
   }
 
@@ -688,7 +707,8 @@ object StreamErrorHandling {
     * the cause message (Pipeline.quarantineToDeadLetters) — contract
     * breaks and thrown errors share one streaming DLQ store. Same
     * exactly-once layout as [[captureToDlq]]: each micro-batch owns
-    * its batch_id=N partition dir, crash replay overwrites it.
+    * its batch_id=N partition dir, crash replay overwrites it. Each
+    * rule runs once per row, in one routed job per trigger.
     */
   def contractToDlq(
       stream: DataFrame,
@@ -699,17 +719,10 @@ object StreamErrorHandling {
       dlqPath: String,
       checkpointPath: String): StreamingQuery =
     eachTrigger(stream, checkpointPath) { (batch, batchId) =>
-      // one flagged scan feeds both sinks
-      val flagged = graft.operators.Pipeline.expectations(batch, rules).persist()
-      try {
-        val okCols = rules.map { case (n, _) => s"ok_$n" } :+ "quarantined"
-        writeSinks(batch.sparkSession)(
-          (() => flagged.filter(!col("quarantined")).drop(okCols: _*)) ->
-            s"$valuesPath/batch_id=$batchId",
-          (() => graft.operators.Pipeline.quarantineToDeadLetters(
-            flagged.drop(okCols: _*), rules, input, description)) ->
-            s"$dlqPath/batch_id=$batchId")
-      } finally { flagged.unpersist(); () }
+      val P = graft.operators.Pipeline
+      writeSplit(P.expectations(batch, rules), !col("quarantined"))(
+        batch.columns.toSeq.map(col) -> s"$valuesPath/batch_id=$batchId",
+        P.contractDeadLetterColumns(rules, input, description) -> s"$dlqPath/batch_id=$batchId")
     }
 
   /** One trigger of the streaming contamination gate — the body shared
@@ -741,10 +754,11 @@ object StreamErrorHandling {
 
   /** One trigger of the ST35 DSIR gate — factored out so the spec can
     * drive it batch-for-batch. Per-row scoring only (the nano-long
-    * fold, no aggregate/state); ONE pass per trigger: the scored frame
-    * is pinned, then split by the threshold into kept/rejected stores.
-    * Overwrite-by-batch_id: a crash-replayed trigger rewrites its own
-    * partition, never re-appends (the e12/epoch-store discipline).
+    * fold, no aggregate/state); ONE routed job per trigger splits the
+    * scored rows by the threshold into kept/rejected stores, a null
+    * score to rejected. Overwrite-by-batch_id: a crash-replayed trigger
+    * rewrites its own partition, never re-appends (the e12/epoch-store
+    * discipline).
     */
   def processDsirTrigger(batch: DataFrame, batchId: Long,
       modelNanos: Map[String, Long], minLogWeight: Double,
@@ -752,13 +766,8 @@ object StreamErrorHandling {
       textCol: String = "text", hexChars: Int = 2): Unit = {
     val (nTok, lw) = graft.operators.Pipeline
       .dsirRowScore(col(textCol), modelNanos, hexChars)
-    val scored = batch.withColumn("n_tokens", nTok)
-      .withColumn("log_weight", lw).localCheckpoint()
-    writeSinks(batch.sparkSession)(
-      (() => scored.filter(col("log_weight") >= lit(minLogWeight))) ->
-        s"$keptPath/batch_id=$batchId",
-      (() => scored.filter(col("log_weight") < lit(minLogWeight) || col("log_weight").isNull)) ->
-        s"$rejectedPath/batch_id=$batchId")
+    writeGate(batch.withColumn("n_tokens", nTok).withColumn("log_weight", lw),
+      col("log_weight") >= lit(minLogWeight), batchId, keptPath, rejectedPath)
   }
 
   /** Streaming DSIR quality gate (ST35): the p25 importance scorer as
@@ -789,31 +798,23 @@ object StreamErrorHandling {
       model: graft.operators.TextAnalysis.QualityModel, minScore: Double,
       keptPath: String, rejectedPath: String,
       textCol: String = "text"): Unit = {
-    val scored = batch.withColumn("quality_score",
-      graft.operators.TextAnalysis.qualityScore(col(textCol), model))
-      .localCheckpoint()
-    writeSinks(batch.sparkSession)(
-      (() => scored.filter(col("quality_score") >= lit(minScore))) ->
-        s"$keptPath/batch_id=$batchId",
-      (() => scored.filter(col("quality_score") < lit(minScore) || col("quality_score").isNull)) ->
-        s"$rejectedPath/batch_id=$batchId")
+    writeGate(batch.withColumn("quality_score",
+        graft.operators.TextAnalysis.qualityScore(col(textCol), model)),
+      col("quality_score") >= lit(minScore), batchId, keptPath, rejectedPath)
   }
 
   /** One trigger of the ST38 Gopher-rule gate: the per-row integer
     * verdict (bit-equal to batch t38's `keep` — all-integer rules have
     * no score threshold to drift), kept/rejected overwrite by batch_id.
+    * A document with a null verdict (null text) is rejected.
     */
   def processGopherTrigger(batch: DataFrame, batchId: Long,
       minWords: Long, maxWords: Long, stopwords: Seq[String],
       keptPath: String, rejectedPath: String,
       textCol: String = "text"): Unit = {
-    val flagged = batch.withColumn("gopher_keep",
-      graft.operators.TextAnalysis.gopherKeepRow(col(textCol), minWords,
-        maxWords, stopwords))
-      .localCheckpoint()
-    writeSinks(batch.sparkSession)(
-      (() => flagged.filter(col("gopher_keep"))) -> s"$keptPath/batch_id=$batchId",
-      (() => flagged.filter(!col("gopher_keep"))) -> s"$rejectedPath/batch_id=$batchId")
+    writeGate(batch.withColumn("gopher_keep",
+        graft.operators.TextAnalysis.gopherKeepRow(col(textCol), minWords,
+          maxWords, stopwords)), col("gopher_keep"), batchId, keptPath, rejectedPath)
   }
 
   /** Streaming Gopher-rule quality gate (ST38): t38's live face — the

@@ -25,15 +25,18 @@ import graft.streaming.EpochStore
   *  - torn: every `epoch=r` / `batch_id=r` dir r wrote loses its
   *    `_SUCCESS` and one part file (a blob store's blob is truncated);
   *  - lost: outputs written, but every state `epoch=r` is missing;
+  *  - torn routed (members that write their sinks as one routed job):
+  *    the job committed its first sink, and every later sink's
+  *    `batch_id=r` dir is torn as above;
   * and one after the commit:
   *  - stale: an interrupted GC — every state epoch the GC already
   *    deleted is restored before trigger r+1, which must ignore it and
   *    collect it.
-  * Each crash build rotates the four crash points over the triggers
-  * (build k crashes trigger i with point (i + k) mod 4), so across the
-  * builds every trigger meets every crash point. After every trigger
-  * run, clean or crashed, each state dir must hold at most two epochs —
-  * the GC bound. Members without state dirs meet torn outputs and
+  * Each crash build rotates the member's crash points over the
+  * triggers (build k of n crashes trigger i with point (i + k) mod n),
+  * so across the builds every trigger meets every crash point. After
+  * every trigger run, clean or crashed, each state dir must hold at
+  * most two epochs — the GC bound. Members without state dirs meet torn outputs and
   * plain replays only.
   *
   * Each member contributes only (state dirs, deterministic batch for
@@ -54,13 +57,15 @@ class StoreReplayPropertySpec extends SparkSpec {
   private val Triggers = 4
 
   /** `stateDirs` are the member's epoch stores, relative to the run
-    * root; its other dirs are outputs. */
+    * root; its other dirs are outputs. `routed` names the sinks of its
+    * routed job in the job's order, if it writes one. */
   private case class Member(
       name: String,
       stateDirs: Seq[String],
       batch: Int => DataFrame,
       run: (DataFrame, Long, String) => Unit,
-      snap: String => Seq[String])
+      snap: String => Seq[String],
+      routed: Seq[String] = Nil)
 
   private def canon(df: DataFrame): Seq[String] = {
     val cols = df.schema.fields.map { f =>
@@ -200,7 +205,32 @@ class StoreReplayPropertySpec extends SparkSpec {
           delayMs = 20L, s"$rt/values", s"$rt/late", s"$rt/state"),
         rt => tagged("state" -> latestState(s"$rt/state"),
           "values" -> canonPath(s"$rt/values"),
-          "late" -> canonPath(s"$rt/late"))),
+          "late" -> canonPath(s"$rt/late")),
+        routed = Seq("values", "late")),
+      Member("captureToDlq", Nil,
+        i => (Seq(s"${i + 1}", s"bad-$i", s"${i * 10 + 2}") ++
+          (if (i % 2 == 0) Seq(s"worse-$i") else Nil)).toDF("s"),
+        (b, id, rt) => {
+          val captured = graft.core.ErrorFrame.captureErrors(
+            b, Map("v" -> expr("cast(s as bigint)")), input = col("s"))
+          E.processCaptureTrigger(captured.df, id, captured.resultNames,
+            col("s"), "replay property", s"$rt/values", s"$rt/dlq")
+        },
+        rt => tagged("values" -> canonPath(s"$rt/values"),
+          // stack frames re-render per capture scan: keep the stable fields
+          "dlq" -> (if (!new File(s"$rt/dlq").exists) Nil else canon(spark.read
+            .parquet(s"$rt/dlq").select(col("batch_id"), col("input_value"),
+              col("description"), col("cause.error_class"))))),
+        routed = Seq("values", "dlq")),
+      Member("gopherGate (ST38)", Nil,
+        i => Seq((i * 10L, s"the quick brown fox jumps over lazy dogs with ease doc$i"),
+          (i * 10L + 1, s"of $i"), (i * 10L + 2, null: String)).toDF("doc_id", "text"),
+        (b, id, rt) => E.processGopherTrigger(b, id, minWords = 3L,
+          maxWords = 1000L, graft.operators.TextAnalysis.GopherStopwords,
+          s"$rt/kept", s"$rt/rejected"),
+        rt => tagged("kept" -> canonPath(s"$rt/kept"),
+          "rejected" -> canonPath(s"$rt/rejected")),
+        routed = Seq("kept", "rejected")),
       Member("maintainLshDedup (ST29)", Seq("state/bands", "state/docs"),
         i => (0 until 6).map { j =>
           ((i * 10 + j).toLong, (0 until 12)
@@ -306,7 +336,9 @@ class StoreReplayPropertySpec extends SparkSpec {
   private case object Torn extends Crash
   private case object Lost extends Crash
   private case object Stale extends Crash
-  private val crashes = Seq(Doubled, Torn, Lost, Stale)
+  private case object TornRouted extends Crash
+  private def crashes(m: Member): Seq[Crash] =
+    Seq(Doubled, Torn, Lost, Stale) ++ Option.when(m.routed.nonEmpty)(TornRouted)
 
   private def epochDirs(dir: File): Seq[File] =
     Option(dir.listFiles()).toSeq.flatten
@@ -352,6 +384,8 @@ class StoreReplayPropertySpec extends SparkSpec {
                 .filter(d => d.getName == s"epoch=$i" || d.getName == s"batch_id=$i")
                 .foreach(tear)
             case Lost => states.foreach(d => FileUtils.deleteDirectory(new File(d, s"epoch=$i")))
+            case TornRouted =>
+              m.routed.tail.foreach(d => tear(new File(rt, s"$d/batch_id=$i")))
             case Doubled | Stale =>
           }
           if (plan(i).exists(_ != Stale)) run(i)
@@ -376,8 +410,9 @@ class StoreReplayPropertySpec extends SparkSpec {
       }
       val clean = build(_ => None)
       assert(clean.nonEmpty, s"${m.name}: empty snapshot — property is vacuous")
-      for (k <- crashes.indices) {
-        val plan = (i: Int) => Some(crashes((i + k) % crashes.size))
+      val points = crashes(m)
+      for (k <- points.indices) {
+        val plan = (i: Int) => Some(points((i + k) % points.size))
         val crashed = build(plan)
         assert(crashed == clean,
           s"${m.name}: crashes ${(0 until Triggers).map(i => s"$i:${plan(i).get}")

@@ -133,13 +133,15 @@ class StreamingSpec extends SparkSpec {
     val bad = "too short the of"
     val docs = Seq((1L, good), (2L, bad), (3L, good + " extra"),
       (4L, (1 to 60).map(_ => "xy").mkString(" ") + " the of"))
+    // no verdict for a null text: it must still land in one sink
+    val noText = (5L, null: String)
     val tmp = Files.createTempDirectory("graft-gopher-gate").toString
     val mem = MemoryStream[(Long, String)]
     val q = StreamErrorHandling.gopherGate(
       mem.toDF().toDF("doc_id", "text"),
       s"$tmp/kept", s"$tmp/rejected", s"$tmp/ckpt")
     mem.addData(docs.take(2)); q.processAllAvailable()
-    mem.addData(docs.drop(2)); q.processAllAvailable()
+    mem.addData(docs.drop(2) :+ noText); q.processAllAvailable()
     q.stop()
     val kept = spark.read.parquet(s"$tmp/kept")
       .select($"doc_id").as[Long].collect().toSet
@@ -149,15 +151,15 @@ class StreamingSpec extends SparkSpec {
     val batch = graft.operators.TextAnalysis
       .gopherQualityFlags(docs.toDF("doc_id", "text"))
       .select($"doc_id", $"keep").as[(Long, Boolean)].collect().toMap
-    assert(kept == batch.filter(_._2).keySet && rej == batch.filterNot(_._2).keySet)
-    assert(kept == Set(1L, 3L) && rej == Set(2L, 4L))
+    assert(kept == batch.filter(_._2).keySet && rej - 5L == batch.filterNot(_._2).keySet)
+    assert(kept == Set(1L, 3L) && rej == Set(2L, 4L, 5L))
     // crash-replay: re-running trigger 0 rewrites, never re-appends
     StreamErrorHandling.processGopherTrigger(
       docs.take(2).toDF("doc_id", "text"), batchId = 0L, 50L, 100000L,
       graft.operators.TextAnalysis.GopherStopwords, s"$tmp/kept",
       s"$tmp/rejected")
     assert(spark.read.parquet(s"$tmp/kept").count() +
-      spark.read.parquet(s"$tmp/rejected").count() == 4L)
+      spark.read.parquet(s"$tmp/rejected").count() == 5L)
   }
 
   test("contaminationGate (ST30): per-trigger verdicts equal the batch p4 verdict") {

@@ -2,23 +2,28 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, CyclicBarrier, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ListenerDrain
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.SparkSpec
 
-/** A trigger writes its sinks as concurrent jobs over one pinned
-  * capture ([[StreamErrorHandling.writeSinks]]), or as one job over
-  * routed rows (`captureToDlq`): the writes overlap, the capture and
-  * its telemetry run once per row, a failed write fails the trigger and
-  * its replay rewrites every sink, and `stop()` leaves no sink job
+/** A trigger writes its sinks as one job over routed rows
+  * ([[StreamErrorHandling.writeSplit]]: `captureToDlq`, `contractToDlq`,
+  * the DSIR, classifier and Gopher gates, `quarantineLate`), or as
+  * concurrent jobs over one pinned frame
+  * ([[StreamErrorHandling.writeSinks]]): a routed trigger runs one job
+  * and computes each row once, concurrent writes overlap, the capture
+  * and its telemetry run once per row, a failed write fails the trigger
+  * and its replay rewrites every sink, and `stop()` leaves no sink job
   * behind.
   */
 class ConcurrentSinksSpec extends SparkSpec {
@@ -98,31 +103,74 @@ class ConcurrentSinksSpec extends SparkSpec {
     FileUtils.deleteDirectory(tmp.toFile)
   }
 
-  test("a captureToDlq trigger runs exactly one job") {
-    val tmp = Files.createTempDirectory("graft-sink-one-job")
-    drop(tmp, "warm", Seq("0"))
-    val q = captureToDlq(tmp)
-    q.processAllAvailable()
-    val group = q.runId.toString
-    val jobs = new ConcurrentHashMap[Int, String]()
+  test("jobs per trigger of every routed trigger body") {
+    val P = graft.operators.Pipeline
+    val T = graft.operators.TextAnalysis
+    val docs = Seq((1L, "1 3 5"), (2L, "x y")).toDF("doc_id", "text")
+    val nanos = P.dsirModelNanos(P.dsirModel(docs, isTarget = $"doc_id" === 1L))
+    val model = T.trainQualityModel((
+      (0L until 10L).map(i => (i, ("rep rep rep w" + i + " ") * 6)) ++
+      (10L until 20L).map(i => (i, (0 until 24).map(j => s"t${i}_$j").mkString(" ")))
+    ).toDF("doc_id", "text"), isPositive = $"doc_id" < 10L)
+    val E = StreamErrorHandling
+    // (body, jobs per trigger, query over the lines of `in` writing
+    // sinks a and b under `root`)
+    val bodies = Seq[(String, Int, (DataFrame, Path) => StreamingQuery)](
+      ("captureToDlq", 1, (in, root) => E.captureToDlq(in, Results, $"value", "jobs",
+        s"$root/a", s"$root/b", s"$root/ckpt")),
+      ("contractToDlq", 1, (in, root) => E.contractToDlq(in,
+        Seq("digits" -> $"value".rlike("^[0-9]+$")), $"value", "jobs",
+        s"$root/a", s"$root/b", s"$root/ckpt")),
+      ("dsirGate", 1, (in, root) => E.dsirGate(in.toDF("text"), nanos, 0.0,
+        s"$root/a", s"$root/b", s"$root/ckpt")),
+      ("classifierGate", 1, (in, root) => E.classifierGate(in.toDF("text"), model, 0.5,
+        s"$root/a", s"$root/b", s"$root/ckpt")),
+      ("gopherGate", 1, (in, root) => E.gopherGate(in.toDF("text"),
+        s"$root/a", s"$root/b", s"$root/ckpt", minWords = 1L)),
+      // the prior watermark's read, the routed job and the state commit
+      ("quarantineLate", 3, (in, root) => E.quarantineLate(
+        in.withColumn("ts", expr("timestamp_millis(crc32(value))")), "ts", 1000L,
+        s"$root/a", s"$root/b", s"$root/state", s"$root/ckpt")))
+    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_ == group).foreach(g => jobs.put(e.jobId, g))
+          .foreach(g => jobs.computeIfAbsent(g, _ => new AtomicInteger).incrementAndGet())
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      (1 to 3).foreach { i =>
-        drop(tmp, s"t$i", Seq("1", "x", "3"), Seq("y", "5"))
+    try bodies.foreach { case (body, expected, start) =>
+      val tmp = Files.createTempDirectory("graft-sink-jobs")
+      drop(tmp, "warm", Seq("0"))
+      val q = start(spark.readStream.text(s"$tmp/in/*"), tmp)
+      try {
         q.processAllAvailable()
-      }
-      ListenerDrain(spark.sparkContext)
+        def ran: Int = {
+          ListenerDrain(spark.sparkContext)
+          Option(jobs.get(q.runId.toString)).fold(0)(_.get)
+        }
+        (1 to 3).foreach { i =>
+          val before = ran
+          drop(tmp, s"t$i", Seq("1", "x", "3"), Seq("y", "5"))
+          q.processAllAvailable()
+          assert(ran - before == expected, s"$body: jobs of trigger $i")
+          assert(rowsAt(s"$tmp/a/batch_id=$i") + rowsAt(s"$tmp/b/batch_id=$i") == 5,
+            s"$body: rows of trigger $i")
+        }
+      } finally q.stop()
+      FileUtils.deleteDirectory(tmp.toFile)
     } finally spark.sparkContext.removeSparkListener(listener)
-    q.stop()
-    assert(jobs.size == 3, s"jobs of three triggers: ${jobs.keySet}")
-    (1 to 3).foreach { i =>
-      assert(rowsAt(s"$tmp/values/batch_id=$i") == 3 && rowsAt(s"$tmp/dlq/batch_id=$i") == 2)
-    }
+  }
+
+  test("a split computes a score read by its predicate and both sinks once per row") {
+    val tmp = Files.createTempDirectory("graft-split-once")
+    ConcurrentSinksSpec.scored.set(0)
+    val score = udf { (x: Long) => ConcurrentSinksSpec.scored.incrementAndGet(); x % 10 }
+    val rows = spark.range(0, 100, 1, 4).withColumn("score", score($"id"))
+    StreamErrorHandling.writeSplit(rows, $"score" >= 5)(
+      Seq($"id", $"score") -> s"$tmp/high",
+      Seq($"id", ($"score" * 2).as("twice")) -> s"$tmp/low")
+    assert(ConcurrentSinksSpec.scored.get == 100)
+    assert(rowsAt(s"$tmp/high") == 50 && rowsAt(s"$tmp/low") == 50)
     FileUtils.deleteDirectory(tmp.toFile)
   }
 
@@ -189,6 +237,7 @@ class ConcurrentSinksSpec extends SparkSpec {
 object ConcurrentSinksSpec {
   @volatile var barrier: CyclicBarrier = _
   @volatile var started: CountDownLatch = _
+  val scored = new AtomicLong
 }
 
 /** Ids and job groups of the jobs [[StreamErrorHandling.writeSinks]]
