@@ -111,7 +111,7 @@ object Bench {
     s"""{"metric":"total","value":${dec(m.map(_._2).sum)},"n":${m.size},"sf":"$sfDir","cpus":$cpus,"artifact":"$artifact"}"""
 
   val defaultSfDir = "/root/testdata/sf0.1"
-  val defaultCpus = "32"
+  val defaultCpus = GraftSession.DefaultCores.toString
 
   /** Artifact path for a run — pure, spec-pinned (VERDICT r14 task 2):
     * a run at a foreign SF *or a foreign core count* with no explicit
@@ -178,18 +178,19 @@ object Bench {
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** The Bench session: AQE coalesces by size, not to the core count,
+    * and a join side up to 64 MB is broadcast.
+    */
+  private[graft] def sessionBuilder(cores: Int): SparkSession.Builder =
+    GraftSession.builder(cores)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSfDir)
+    val cores = GraftSession.cores
+    val cpus = cores.toString
+    val spark = sessionBuilder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val selected =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-scale dataset (~10× sf0.1) by structure-preserving
@@ -44,14 +44,7 @@ object MakeSf1 {
     // divisible by the small moduli queries use; override when composing
     // (a second 10x pass over an sf1 output needs a 100M stride)
     val stride = args.lift(3).map(_.toLong).getOrElse(10000000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def rep(table: String)(f: (DataFrame, Int) => DataFrame): Unit = {

@@ -10,15 +10,14 @@ import graft.core.ErrorFrame
   * silent interpreted fallback). Usage: sbt "runMain graft.Probe".
   */
 object Probe {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  /** Four cores; generated code only, with no interpreted fallback. */
+  private[graft] def sessionBuilder: SparkSession.Builder =
+    GraftSession.builder(4)
       .config("spark.sql.codegen.fallback", "false")
       .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .getOrCreate()
+
+  def main(args: Array[String]): Unit = {
+    val spark = sessionBuilder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     println("ENTRY_ROWS=" + SparkEntry.entry(spark).count())
     val dir = if (args.nonEmpty && !args(0).startsWith("explain:")) args(0)

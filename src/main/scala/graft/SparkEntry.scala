@@ -701,47 +701,28 @@ object SparkEntry {
       .orderBy($"lang")
   }
 
-  /** ONE materialization of the d4 verified-pair list per (session,
-    * sf dir). ~10 sweep queries (CC, dedup apply, PageRank, purity /
-    * triangle audits, leakage splits, best-of-cluster) consume the
-    * SAME pair list; before this each re-ran the full
-    * shingle→candidate→verify pipeline — ~10× the sweep's heaviest
-    * stage. The pair list is tiny (near-dup PAIRS, not documents), so
-    * one localCheckpoint pins it; at 100 TB the same amortization is
-    * [[operators.Dedup.writePairStore]] (mine once at ingest, every
-    * consumer reads the store — the d25 band-index pattern one step
-    * further). d4 keeps the full recompute under the oracle and
-    * d27_pair_store pins store-roundtrip == recompute.
+  /** The d4 verified-pair list, which ~10 sweep queries consume (CC,
+    * dedup apply, PageRank, purity / triangle audits, leakage splits,
+    * best-of-cluster), pinned once per call: the pair list is tiny
+    * (near-dup PAIRS, not documents) and the iterative consumers read
+    * it every round. Each query builds its own, so its time is cold and
+    * no state outlives it; sharing one pair list across consumers at
+    * 100 TB is [[operators.Dedup.writePairStore]] (mine once at ingest,
+    * every consumer reads the store), and d27_pair_store pins
+    * store-roundtrip == recompute.
     */
-  // SESSION keys (not identityHashCode strings) so a key can never
-  // alias another live session. NOTE: this cache lives for the JVM
-  // lifetime — the cached DataFrames strongly reference their
-  // SparkSession (a value→key path), so despite the weak keys no entry
-  // is ever collectable (ADVICE r8; the weak keys buy non-aliasing,
-  // not GC). Bounded in practice: one entry per (session, sf dir), and
-  // Verify/Bench run one session per JVM. Cache assumes the data under
-  // `dir` is immutable for the session's lifetime (true for testdata).
-  private val pairCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, DataFrame]]()
   private def verifiedPairs(s: SparkSession, dir: String): DataFrame =
-    pairCache.synchronized {
-      pairCache.computeIfAbsent(s,
-          _ => scala.collection.mutable.Map.empty[String, DataFrame])
-        .getOrElseUpdate(dir,
-          // repartition(da) before the pin: ngramJaccard's wide pair
-          // tail (r15) leaves the result in 32 near-empty partitions,
-          // and a checkpoint FREEZES that width into every iterative
-          // consumer (d8/d9/d20's CC and PageRank loops paid 32 tasks
-          // per round for a few-hundred-row frame — measured 0.34→0.91
-          // / 1.36→2.05 s). A keyed exchange is AQE-resizable, so the
-          // pinned frame is size-appropriate at ANY scale: ~1 partition
-          // here, many at 100 TB.
-          operators.Dedup.ngramJaccard(t(s, dir, "documents"), n = 2,
-              blockCol = "source", threshold = 0.1)
-            .repartition(org.apache.spark.sql.functions.col("da"))
-            .localCheckpoint())
-    }
+    // repartition(da) before the pin: ngramJaccard's wide pair tail
+    // leaves the result in 32 near-empty partitions, and a checkpoint
+    // FREEZES that width into every iterative consumer (d8/d9/d20's CC
+    // and PageRank loops paid 32 tasks per round for a few-hundred-row
+    // frame — measured 0.34→0.91 / 1.36→2.05 s). A keyed exchange is
+    // AQE-resizable, so the pinned frame is size-appropriate at ANY
+    // scale: ~1 partition here, many at 100 TB.
+    operators.Dedup.ngramJaccard(t(s, dir, "documents"), n = 2,
+        blockCol = "source", threshold = 0.1)
+      .repartition(org.apache.spark.sql.functions.col("da"))
+      .localCheckpoint()
 
   private def clusters(s: SparkSession, dir: String, driverSolveMaxEdges: Long): DataFrame = {
     import s.implicits._

@@ -4,6 +4,11 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** AQE coalesces by size, not to the core count. */
+  private[graft] def sessionBuilder(cores: Int): SparkSession.Builder =
+    GraftSession.builder(cores)
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: dump only these queries (dev iteration;
@@ -13,16 +18,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as long (nanos)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .getOrCreate()
+    val spark = sessionBuilder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val selected = if (only.isEmpty) SparkEntry.queries

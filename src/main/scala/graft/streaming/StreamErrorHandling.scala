@@ -2,8 +2,11 @@ package graft.streaming
 
 import java.util.concurrent.{CompletableFuture, CompletionException, ExecutionException, TimeUnit, TimeoutException}
 
+import scala.concurrent.Await
+import scala.concurrent.duration.FiniteDuration
 import scala.util.Try
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.ExecutionBridge
@@ -520,10 +523,24 @@ object StreamErrorHandling {
       // a NULL event time cannot be judged — it goes to quarantine with
       // null lateness rather than silently vanishing from both sinks
       (cols :+ (lit(priorWm) - col("__ms")).as("lateness_ms")) -> s"$latePath/batch_id=$batchId")
-    val newWm = Option(seen.get("max_ms").asInstanceOf[java.lang.Long])
+    val timeout = FiniteDuration(
+      JavaUtils.timeStringAsMs(spark.conf.get("spark.network.timeout", "120s")), TimeUnit.MILLISECONDS)
+    val newWm = Option(awaitObserved(seen, timeout).getAs[java.lang.Long]("max_ms"))
       .fold(priorWm)(ms => math.max(priorWm, ms - delayMs))
     state.commit(batchId, Seq(newWm).toDF("wm_ms").coalesce(1))
   }
+
+  /** `seen`'s metrics, waiting at most `timeout` for the execution that
+    * observes it to end. A listener bus that drops the execution-end
+    * event never completes it; the trigger then fails before its state
+    * commit, so the restart replays the batch, instead of hanging.
+    */
+  private[graft] def awaitObserved(seen: Observation, timeout: FiniteDuration): Row =
+    try Await.result(seen.future, timeout)
+    catch {
+      case e: TimeoutException => throw new IllegalStateException(
+        s"observation ${seen.name} did not complete within $timeout", e)
+    }
 
   /** Unbounded-horizon streaming dedup via an accumulating Bloom state
     * (ST17) — the complement of [[dedupStreaming]]'s exact

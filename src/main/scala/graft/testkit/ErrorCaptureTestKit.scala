@@ -22,18 +22,15 @@ object ErrorCaptureTestKit {
     * the analog of ErrorCaptureTopologyTest.getKafkaProperties().
     */
   def localSession(appName: String = "graft-testkit", threads: Int = 4): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName(appName)
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.shuffle.partitions", threads)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = sessionBuilder(appName, threads).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  private[graft] def sessionBuilder(appName: String, threads: Int): SparkSession.Builder =
+    graft.GraftSession.builder(threads)
+      .appName(appName)
+      .config("spark.sql.ansi.enabled", "true")
 
   /** All three branches of one capture topology, materialized. */
   final case class CaptureResult(values: DataFrame, errors: DataFrame, deadLetters: DataFrame)

@@ -1121,6 +1121,19 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(late).count() == 2)
   }
 
+  test("late-data quarantine: an observation that never completes fails the wait, bounded") {
+    import scala.concurrent.duration._
+    // a listener bus that drops the execution-end event leaves the
+    // trigger's observation like this one: registered, never completed
+    val never = org.apache.spark.sql.Observation("late-max-never-observed")
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](StreamErrorHandling.awaitObserved(never, 300.millis))
+    val waitedMs = (System.nanoTime() - t0) / 1e6
+    assert(e.getMessage.contains("late-max-never-observed"))
+    assert(e.getCause.isInstanceOf[java.util.concurrent.TimeoutException])
+    assert(waitedMs >= 300 && waitedMs < 30_000)
+  }
+
   test("bloom streaming dedup: duplicates dropped past any horizon; replay rewrites") {
     import graft.streaming.StreamErrorHandling
     val tmp = Files.createTempDirectory("graft-bloomdedup").toString

@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.SinkTaskSize
+import org.apache.spark.sql.graftshim.{BlockCount, SinkTaskSize}
 
 import graft.SparkSpec
 import graft.streaming.EpochStore
@@ -130,6 +130,26 @@ class SinkWriterSpec extends SparkSpec {
       assert(!files(s"$tmp/$s").exists(f => f == "_temporary" || f.startsWith(".spark-staging")),
         s"$s: ${files(s"$tmp/$s")}")
     }
+    FileUtils.deleteDirectory(tmp.toFile)
+  }
+
+  test("200 writes leave no broadcast block behind after a GC") {
+    val tmp = Files.createTempDirectory("graft-sink-writer-broadcasts")
+    val df = spark.range(0, 40, 1, 2).toDF()
+    // broadcast ids count up: a probe broadcast's id bounds the writes'
+    def nextId(): Long = { val b = spark.sparkContext.broadcast(0); b.destroy(); b.id }
+    val from = nextId()
+    (1 to 200).foreach(_ => LocalFiles.writeParquet(df, s"$tmp/out"))
+    val until = nextId()
+    // each write broadcast its conf and its job's task binary
+    assert(until - from > 200)
+    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+    while (BlockCount.broadcasts(from, until) > 0 && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(BlockCount.broadcasts(from, until) == 0)
+    assert(rows(s"$tmp/out").size == 40)
     FileUtils.deleteDirectory(tmp.toFile)
   }
 
